@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -13,25 +11,16 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
+    val spark = Session.builder(Session.workers())
       // the codegen cache is a JVM-wide 100-entry LRU by default; 221
       // warmed queries plus the streaming components thrash it, so the
       // micro-batch ingest loops recompile their probe plans between
       // interleaved reps (~200-300 ms per Janino compile — measured as
-      // the gap between IngestProf's 0.7 s steady batch and the same
-      // batch inside this session). Any long-running service sizes
+      // the gap between a 0.7 s steady batch in a fresh session and the
+      // same batch inside this session). Any long-running service sizes
       // this; the cache is created once per JVM, so it must be set on
       // the session builder, not per batch.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *    obsolete: Spark owns transport (Tungsten UnsafeRow + Netty shuffle);
   *  - `progress_bar` → [[graft.progress.Progress]] accumulators.
   *
+  * Every main builds its session here, so the plans Verify checks are
+  * the plans Bench times; a main adds only the overrides it names at
+  * the call.
+  *
   * Scale notes (cluster posture, tested on local[n]):
   *  - AQE on: runtime shuffle-partition coalescing, skew-join splitting.
   *  - shuffle.partitions defaults to the local core count here; on a real
@@ -57,6 +61,13 @@ object Session {
       } finally src.close()
     } catch { case _: Throwable => logical }
   }
+
+  /** The worker count every main builds its session with:
+    * `SPARK_GRAFT_CPUS` when set, else [[physicalCores]] (the
+    * reference's `nb_workers` default).
+    */
+  def workers(): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(physicalCores())
 
   def builder(nbWorkers: Int = physicalCores()): SparkSession.Builder =
     SparkSession

@@ -28,16 +28,6 @@ object TextFunctions {
   /** Whitespace token count. */
   def tokenCount(c: Column): Column = size(tokens(c))
 
-  /** Rough BPE-ish subword count: word-pieces of <=4 chars — a cheap,
-    * deterministic stand-in for tokenizer budgeting (ceil(len/4) per
-    * word ≈ byte-pair piece count).
-    */
-  def subwordCount(c: Column): Column =
-    aggregate(
-      tokens(c),
-      lit(0L),
-      (acc, w) => acc + ceil(length(w) / lit(4.0)).cast("long"))
-
   /** Fraction of characters that are ASCII punctuation (0 for empty). */
   def punctRatio(c: Column): Column =
     when(length(c) === 0, lit(0.0)).otherwise(

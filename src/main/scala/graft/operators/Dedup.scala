@@ -991,7 +991,7 @@ object Dedup {
     // stage STRAGGLER (every other leg's task finishes in a third of
     // its wall), so a handful of slices keeps both the task count and
     // the critical path short.
-    val aligned = graft.ops.Stage.rerootLazy(
+    val aligned = graft.ops.Stage.materializeLazy(
       frame.withColumn(unitName.takeWhile(_ != '='), lit(partValue))
         .coalesce(4))
     val units2 = e.units + (unitName -> fp)
@@ -1098,23 +1098,6 @@ object Dedup {
         e.units.forall { case (u, fp) => units.get(u).contains(fp) } &&
           (units.size - e.units.size) <= MaxDeltaSegments
       }
-    if (sys.env.contains("GRAFT_CACHE_DEBUG")) {
-      val why =
-        if (reusable) "HIT delta=" + (units.keySet -- cur.get.units.keySet).size
-        else if (mixed) "MISS mixed"
-        else if (!indexSchemaCache.containsKey(path)) "MISS no-schema"
-        else if (cur.isEmpty) "MISS no-entry"
-        else {
-          val e = cur.get
-          val bad = e.units.collect {
-            case (u, fp) if !units.get(u).contains(fp) =>
-              s"$u: cached=$fp now=${units.get(u)}"
-          }
-          if (bad.nonEmpty) s"MISS fp [${bad.mkString("; ")}]"
-          else s"MISS growth ${units.size - e.units.size}"
-        }
-      System.err.println(s"[cache] $path $why")
-    }
     if (reusable) {
       val e = cur.get
       val delta = units.keySet -- e.units.keySet
@@ -1362,26 +1345,6 @@ object Dedup {
     */
   private val FusedIngestCap = 200000
 
-  private def ingestDbg[T](name: String)(b: => T): T =
-    graft.streaming.IngestTuning.sectionTimer("fused", name)(b)
-
-  /** Collect under a section timer and, with GRAFT_CACHE_DEBUG, dump
-    * the query's driver-side phase times (analysis / optimization /
-    * planning) — the fixed-cost profiler's view of how much of a
-    * per-batch section is plan prep vs jobs.
-    */
-  private def collectDbg(
-      name: String)(df: DataFrame): Array[org.apache.spark.sql.Row] = {
-    val rows = ingestDbg(name)(df.collect())
-    if (sys.env.contains("GRAFT_CACHE_DEBUG")) {
-      val ph = df.queryExecution.tracker.phases
-      System.err.println(s"[$name-phases] " + ph.map { case (k, v) =>
-        f"$k=${(v.endTimeMs - v.startTimeMs)}%dms"
-      }.mkString(" "))
-    }
-    rows
-  }
-
   /** Driver-byte budget for the fused gather when Spark's own guard is
     * disabled (`spark.driver.maxResultSize=0`, a common production
     * setting) — the pre-bound aggregate below enforces it BEFORE the
@@ -1469,23 +1432,16 @@ object Dedup {
     val guardBytes = gathered.sparkSession.sparkContext.getConf
       .getSizeAsBytes("spark.driver.maxResultSize", "1g")
     if (guardBytes <= 0L) {
-      val bound = ingestDbg("prebound")(
-        gathered
-          .select(approxRowBytes(gathered.schema).as("__b"))
-          .agg(count(lit(1)).as("__n"), sum(col("__b")).as("__bytes"))
-          .collect()(0))
+      val bound = gathered
+        .select(approxRowBytes(gathered.schema).as("__b"))
+        .agg(count(lit(1)).as("__n"), sum(col("__b")).as("__bytes"))
+        .collect()(0)
       if (bound.getLong(0) > FusedIngestCap ||
         (!bound.isNullAt(1) && bound.getLong(1) > FusedIngestMaxBytes))
         return None
     }
     try {
-      val rows = ingestDbg("gather")(gathered.collect())
-      if (sys.env.contains("GRAFT_CACHE_DEBUG")) {
-        val ph = gathered.queryExecution.tracker.phases
-        System.err.println("[gather-phases] " + ph.map { case (k, v) =>
-          f"$k=${(v.endTimeMs - v.startTimeMs)}%dms"
-        }.mkString(" "))
-      }
+      val rows = gathered.collect()
       if (rows.length > FusedIngestCap) None else Some(rows)
     } catch {
       case e: org.apache.spark.SparkException if isResultSizeError(e) => None
@@ -1583,7 +1539,7 @@ object Dedup {
     * shape for the MinHash path, the hot loop of
     * [[graft.streaming.NearDupIngest]]: sign the batch once (ONE eager
     * materialization — the raw batch is re-rooted LAZILY,
-    * [[graft.ops.Stage.rerootLazy]], so signing fuses with the batch
+    * [[graft.ops.Stage.materializeLazy]], so signing fuses with the batch
     * read while downstream codegen stays batch-invariant), verify the
     * corpus probe IN-PLAN and gather banding + the signature payload +
     * the verified corpus flags in ONE collect, then run the quadratic
@@ -1632,7 +1588,7 @@ object Dedup {
     // another 0.5 s one task parquet-encoding every bh array. One
     // small exchange of the raw rows parallelizes all of it; skipped
     // when the source is already spread.
-    val stable = graft.ops.Stage.rerootLazy(
+    val stable = graft.ops.Stage.materializeLazy(
       spreadLean(batch.select(col(idCol), col(textCol))))
     // no checkpoint: the gather collect is the signing pipeline's ONLY
     // consumer now — the batch signs inside the gather's own job, and
@@ -1786,14 +1742,14 @@ object Dedup {
           size(array_intersect(col("sh_a"), col("sh_b")))
             .cast("double").as("inter"),
           monotonically_increasing_id().as("__barrier"))
-      collectDbg("probe")(
-        paired
-          .where(col("__barrier") >= 0 &&
-            least(col("na"), col("nb")) /
-            greatest(col("na"), col("nb")) >= threshold)
-          .where(col("inter") /
-            (col("na") + col("nb") - col("inter")) >= threshold)
-          .select(col("probe_id")))
+      paired
+        .where(col("__barrier") >= 0 &&
+          least(col("na"), col("nb")) /
+          greatest(col("na"), col("nb")) >= threshold)
+        .where(col("inter") /
+          (col("na") + col("nb") - col("inter")) >= threshold)
+        .select(col("probe_id"))
+        .collect()
         .foreach(r => flagged += r.get(0))
     }
     // sorted copies make per-pair intersection a linear merge; bh is
@@ -1896,22 +1852,20 @@ object Dedup {
     // micro-batch. Re-rooting at a LogicalRDD makes every downstream
     // stage's source identical batch over batch, so the codegen cache
     // actually caches.
-    def dbg[T](name: String)(b: => T): T =
-      graft.streaming.IngestTuning.sectionTimer("ingest-fb", name)(b)
     // spread BEFORE the checkpoint (the fused path's win, round 14):
     // a micro-batch arrives as 1-2 source splits, and without the
     // spread the signing, every broadcast-build collect of the sig
     // frame, the survivor checkpoint, and both segment writes all run
     // 1-2 tasks wide (measured: the single-task block scans were the
-    // largest fixed cost of the fallback batch). rerootLazy, not an
+    // largest fixed cost of the fallback batch). materializeLazy, not an
     // eager checkpoint: sig0's materialization is the only consumer,
     // so the spread batch computes inside sig0's own job — one fewer
     // scheduler round trip per batch.
-    val stableBatch = dbg("stable")(graft.ops.Stage.rerootLazy(
-      spreadLean(batch.select(col(idCol), col(textCol)))))
-    val sig0 = dbg("sign")(
+    val stableBatch = graft.ops.Stage.materializeLazy(
+      spreadLean(batch.select(col(idCol), col(textCol))))
+    val sig0 =
       mhSignatures(stableBatch, textCol, idCol, shingleLen, numHashes)
-        .transform(graft.ops.Stage.materializeOnce))
+        .transform(graft.ops.Stage.materializeOnce)
     // corpus probe kicked off CONCURRENTLY with the pairs collect
     // (round 14): the probe flags depend only on sig0 — flagging a
     // doc the intra dedup also drops is harmless (survivors subtract
@@ -1930,19 +1884,19 @@ object Dedup {
         .collect()
         .map(_.get(0)))
     withFlagsCancelOnFailure(flagged) {
-      val intraDrop = dbg("intra")(resolveComponentsAuto(
+      val intraDrop = resolveComponentsAuto(
         mhPairsSigned(sig0, bands, rows, threshold, maxBucketSize, lean = true))
         .where(col("id") =!= col("component"))
-        .select("id"))
+        .select("id")
       val intraSurvivors =
         sig0.join(broadcast(intraDrop), Seq("id"), "left_anti")
-      val survivors = dbg("survivors")((dbg("probe-flags")(flagged()) match {
+      val survivors = (flagged() match {
         case None => intraSurvivors
         case Some(f) => intraSurvivors.join(broadcast(f), Seq("id"), "left_anti")
         // materialize: BOTH segment writes (sig + buckets) consume this
         // frame — without a checkpoint the intra anti-join re-executes
         // per write, doubling the per-batch cost
-      }).transform(graft.ops.Stage.materializeOnce))
+      }).transform(graft.ops.Stage.materializeOnce)
       (survivors, mhSizedBuckets(survivors, bands, rows))
     }
   }
@@ -1952,7 +1906,7 @@ object Dedup {
     * `graft.ingest.probe.timeout.ms`, default 10 min — a hung probe
     * job must not wedge the batch forever) and builds the local flags
     * frame; `cancel()` interrupts the probe thread AND cancels its
-    * Spark job group, so a batch that fails before consuming the
+    * Spark jobs by tag, so a batch that fails before consuming the
     * flags does not leave an orphaned probe job running to
     * completion. Both are idempotent and safe after completion.
     */
@@ -1970,8 +1924,9 @@ object Dedup {
     * back a join-ready local frame builder — the shared concurrency
     * seam of the three unfused ingest shapes (round 14): the flags
     * depend only on the signed batch, so their jobs overlap the pairs
-    * collect + driver union-find. The probe's jobs run under their
-    * own job group (interrupt-on-cancel); [[AsyncFlags.apply]] waits
+    * collect + driver union-find. The probe's jobs carry their own
+    * job tag (interrupt-on-cancel) on top of the caller's inherited
+    * job description and group; [[AsyncFlags.apply]] waits
     * with a generous timeout, unwraps failures, and builds a
     * single-slice local (id) frame (one trivial task per broadcast
     * build — the fused-path trick); [[NoAsyncFlags]] when there is no
@@ -1987,14 +1942,15 @@ object Dedup {
       flags: => Array[Any]): AsyncFlags = {
     if (!probeCorpus) return NoAsyncFlags
     val sc = spark.sparkContext
-    val groupId = s"graft-ingest-probe-${java.util.UUID.randomUUID()}"
+    val tag = s"graft-ingest-probe-${java.util.UUID.randomUUID()}"
     val t = new java.util.concurrent.FutureTask[Array[Any]](() => {
-      // job-group set on the PROBE thread: every job the flag collect
-      // submits lands in the group, so cancel() reaches them
-      sc.setJobGroup(groupId, "graft ingest corpus probe",
-        interruptOnCancel = true)
-      try flags
-      finally sc.clearJobGroup()
+      // tag set on the PROBE thread, which dies with the task: every
+      // job the flag collect submits carries it, so cancel() reaches
+      // them. A tag, not a job group — setJobGroup would overwrite the
+      // job description the thread inherited from the caller
+      sc.addJobTag(tag)
+      sc.setInterruptOnCancel(true)
+      flags
     })
     val th = new Thread(t, "graft-ingest-fb-probe")
     th.setDaemon(true)
@@ -2002,7 +1958,7 @@ object Dedup {
     new AsyncFlags {
       def cancel(): Unit = {
         t.cancel(true)
-        sc.cancelJobGroup(groupId)
+        sc.cancelJobsWithTag(tag)
       }
       def apply(): Option[DataFrame] = {
         val timeoutMs = sys.props
@@ -2610,29 +2566,29 @@ object Dedup {
       val pairType = StructType(Seq(
         StructField("probe_id", idType),
         StructField("probe_sig", LongType)))
-      collectDbg("probe")(
-        readIndexCached(spark, s"$indexPath/buckets")
-          .where(col("bn") <= maxBucketSize)
-          .select(
-            col("id").as("corpus_id"),
-            col("sig"),
-            explode(
-              graft.functions.LocalLookup(
-                col("bucket"), IntegerType, ArrayType(pairType),
-                bandedBuf.iterator.map { case (bk, rs) => (bk, rs.toSeq) }))
-              .as("p"))
-          .select(
-            col("p.probe_id").as("probe_id"),
-            col("corpus_id"),
-            bit_count(col("sig").bitwiseXOR(col("p.probe_sig")))
-              .as("hamming"))
-          .where(col("hamming") <= maxHamming)
-          // NO pair dedup: cross-band collisions of the same verified
-          // pair land as duplicate probe_id rows that the driver SET
-          // below absorbs — the dropDuplicates here cost an exchange +
-          // aggregation inside the probe's one job every batch for a
-          // ≤ bands× bounded duplicate factor
-          .select(col("probe_id")))
+      readIndexCached(spark, s"$indexPath/buckets")
+        .where(col("bn") <= maxBucketSize)
+        .select(
+          col("id").as("corpus_id"),
+          col("sig"),
+          explode(
+            graft.functions.LocalLookup(
+              col("bucket"), IntegerType, ArrayType(pairType),
+              bandedBuf.iterator.map { case (bk, rs) => (bk, rs.toSeq) }))
+            .as("p"))
+        .select(
+          col("p.probe_id").as("probe_id"),
+          col("corpus_id"),
+          bit_count(col("sig").bitwiseXOR(col("p.probe_sig")))
+            .as("hamming"))
+        .where(col("hamming") <= maxHamming)
+        // NO pair dedup: cross-band collisions of the same verified
+        // pair land as duplicate probe_id rows that the driver SET
+        // below absorbs — the dropDuplicates here cost an exchange +
+        // aggregation inside the probe's one job every batch for a
+        // ≤ bands× bounded duplicate factor
+        .select(col("probe_id"))
+        .collect()
         .foreach(r => flagged += r.get(0))
     }
     val pairs = scala.collection.mutable.LinkedHashSet.empty[(Any, Any)]
@@ -2954,32 +2910,21 @@ object Dedup {
     // skip the clone; the clone stays for one-shot batch queries,
     // where it amortizes
     val capped = pairs.select(col(idA).cast("long"), col(idB).cast("long"))
-    val head = graft.streaming.IngestTuning
-      .sectionTimer("components", "pairs-collect")(
-        // keyed on the EXPLICIT IngestTuning marker, not on the limit
-        // knob itself: a user session that happens to set
-        // initialNumPartitions for unrelated reasons must not be
-        // silently routed onto the direct-collect path
-        if (pairs.sparkSession.conf
-            .getOption(graft.streaming.IngestTuning.TunedMarker)
-            .contains("true")) {
-          val lim = capped.limit(driverCap + 1)
-          val rows = lim.collect()
-          if (sys.env.contains("GRAFT_CACHE_DEBUG")) {
-            val ph = lim.queryExecution.tracker.phases
-            System.err.println("[pairs-phases] " + ph.map { case (k, v) =>
-              f"$k=${v.endTimeMs - v.startTimeMs}%dms"
-            }.mkString(" "))
-          }
-          rows
-        } else
-          org.apache.spark.sql.graftbridge.SessionBridge
-            .withConfScopedClone(
-              capped,
-              Map("spark.sql.limit.initialNumPartitions" -> "4096"))(
-              _.limit(driverCap + 1).collect()))
-    if (sys.env.contains("GRAFT_CACHE_DEBUG"))
-      System.err.println(s"[components] pairs=${head.length}")
+    // keyed on the EXPLICIT IngestTuning marker, not on the limit knob
+    // itself: a user session that happens to set initialNumPartitions
+    // for unrelated reasons must not be silently routed onto the
+    // direct-collect path
+    val head =
+      if (pairs.sparkSession.conf
+          .getOption(graft.streaming.IngestTuning.TunedMarker)
+          .contains("true"))
+        capped.limit(driverCap + 1).collect()
+      else
+        org.apache.spark.sql.graftbridge.SessionBridge
+          .withConfScopedClone(
+            capped,
+            Map("spark.sql.limit.initialNumPartitions" -> "4096"))(
+            _.limit(driverCap + 1).collect())
     if (head.length > driverCap)
       return resolveComponents(pairs, idA, idB, maxIters, saltBuckets)
     // union-find, merging by smaller root: the root of a component is
@@ -3556,8 +3501,8 @@ object Dedup {
     // segment-frame building stays on the driver (measured: skipping
     // the spreadLean exchange LOWERED throughput ~25% — the collect's
     // payload deserialization rides the batch's partitioning).
-    val stable = ingestDbg("stable")(graft.ops.Stage.rerootLazy(
-      spreadLean(batch.select(col(idCol), col(vecCol)))))
+    val stable = graft.ops.Stage.materializeLazy(
+      spreadLean(batch.select(col(idCol), col(vecCol))))
     // no checkpoint: the signing pipeline now has exactly ONE consumer
     // (the gather) — a lazy persist would add a materialization job to
     // save recomputation that no longer happens
@@ -3633,7 +3578,7 @@ object Dedup {
     // cluster path
     val payload = scala.collection.mutable
       .ArrayBuffer.empty[(Any, AnyRef, Any, scala.collection.Seq[Int])]
-    ingestDbg("payload")(rows0.foreach { r =>
+    rows0.foreach { r =>
       if (r.getInt(0) == 0) {
         val id = r.get(1)
         val vSeq = r.getAs[scala.collection.Seq[_]](2)
@@ -3650,7 +3595,7 @@ object Dedup {
           arr += id
         }
       }
-    })
+    }
     // Corpus probe verified IN-PLAN — embedding LSH geometry is coarse
     // (bands of a few bits → many candidate collisions per probe), so
     // raw hits are CANDIDATE-volume rows; fetching their vectors to
@@ -3677,7 +3622,7 @@ object Dedup {
       val bandedBuf = scala.collection.mutable.LinkedHashMap
         .empty[Int, scala.collection.mutable.ArrayBuffer[Any]]
       val payBuf = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
-      ingestDbg("locals")(payload.foreach { case (id, vSeq, _, bks) =>
+      payload.foreach { case (id, vSeq, _, bks) =>
         // null-vector rows are never banded so they can never join a
         // hit — keep them out of the pay table (matches the mh path's
         // vals(1) != null guard, keeps the "rows without signatures
@@ -3687,7 +3632,7 @@ object Dedup {
           bandedBuf.getOrElseUpdate(
             bk, scala.collection.mutable.ArrayBuffer.empty[Any]) += id
         }
-      })
+      }
       // NO distinct on the hits: k-band duplicate hits cost one
       // redundant in-plan cosine each, while the dedup aggregate added
       // an exchange + agg to the critical path (fixed latency per
@@ -3702,8 +3647,8 @@ object Dedup {
       // exceed the cap) instead of the per-row `bn` column. The former
       // shape's buckets-scan broadcast build was one more
       // single-task job every micro-batch.
-      val overCap = ingestDbg("overcap")(
-        leanOverCapSet(spark, s"$indexPath/buckets", maxBucketSize))
+      val overCap =
+        leanOverCapSet(spark, s"$indexPath/buckets", maxBucketSize)
       val scan0 = readIndexCached(spark, s"$indexPath/sig")
         .select(
           col("v").as("v_b"),
@@ -3728,7 +3673,7 @@ object Dedup {
               col("probe_id"), idType, vType, payBuf),
             col("v_b")) >= threshold)
         .select(col("probe_id"))
-      collectDbg("probe")(probeDf).foreach(r => flagged += r.get(0))
+      probeDf.collect().foreach(r => flagged += r.get(0))
     }
     // the EXACT cosineFast recursion ([[VectorExpressions
     // .CosineSimilarityExpr.nullSafeEval]]): in-order dot/norm
@@ -3752,7 +3697,7 @@ object Dedup {
     }
     val seen = scala.collection.mutable.HashSet.empty[(Any, Any)]
     val edges = scala.collection.mutable.ArrayBuffer.empty[(Any, Any)]
-    ingestDbg("verify")(bucketsMap.values.forEach { members =>
+    bucketsMap.values.forEach { members =>
       if (members.length >= 2 && members.length <= maxBucketSize) {
         val ids = members.distinct.sortWith(idLess)
         var i = 0
@@ -3767,14 +3712,14 @@ object Dedup {
           i += 1
         }
       }
-    })
+    }
     val drop = resolveDrop(edges, flagged).toSet
     val survivors = payload.filterNot(t => drop.contains(t._1))
-    ingestDbg("segframes")(driverSegmentFrames(
+    driverSegmentFrames(
       spark,
       sig0.schema,
       idType,
-      survivors.map(t => (t._1, Seq[Any](t._1, t._2, t._3), t._4)).toSeq))
+      survivors.map(t => (t._1, Seq[Any](t._1, t._2, t._3), t._4)).toSeq)
   }
 
   /** Build the (sig, buckets) segment frames of a fused micro-batch
@@ -3876,7 +3821,7 @@ object Dedup {
     // of [[mhIngestSegmentFramesUnfused]] — codegen-cache stability,
     // real parallelism for signing/broadcast-collects/writes, one
     // fewer eager job)
-    val stableBatch = graft.ops.Stage.rerootLazy(
+    val stableBatch = graft.ops.Stage.materializeLazy(
       spreadLean(batch.select(col(idCol), col(vecCol))))
     val sig0 = embSignatures(stableBatch, vecCol, idCol, nBits, seed)
       .transform(graft.ops.Stage.materializeOnce)
@@ -3892,21 +3837,18 @@ object Dedup {
         .collect()
         .map(_.get(0)))
     withFlagsCancelOnFailure(flagged) {
-      def dbg[T](name: String)(b: => T): T =
-        graft.streaming.IngestTuning.sectionTimer("emb-unfused", name)(b)
-      val intraDrop = dbg("pairs")(resolveComponentsAuto(
+      val intraDrop = resolveComponentsAuto(
         embPairsSigned(
-          sig0, bands, rows, threshold, maxBucketSize, lean = true)))
+          sig0, bands, rows, threshold, maxBucketSize, lean = true))
         .where(col("id") =!= col("component"))
         .select("id")
       val intraSig = sig0.join(broadcast(intraDrop), Seq("id"), "left_anti")
-      val flags = dbg("flags-wait")(flagged())
-      val survivors = dbg("survivors-mat")((flags match {
+      val survivors = (flagged() match {
         case None => intraSig
         case Some(f) => intraSig.join(broadcast(f), Seq("id"), "left_anti")
         // both segment writes consume this — checkpoint or the probe
         // re-executes per write (see mhIngestSegmentFramesUnfused)
-      }).transform(graft.ops.Stage.materializeOnce))
+      }).transform(graft.ops.Stage.materializeOnce)
       (survivors, sizedBuckets(survivors))
     }
   }

@@ -27,9 +27,9 @@ import org.apache.spark.sql.DataFrame
 object Stage {
 
   /** TEST-ONLY seam (PlanAuditSpec): when set, every frame staged
-    * through [[materializeOnce]] / [[materializeLazy]] / [[rerootLazy]]
-    * reports its PRE-reroot executed plan here. Re-rooting at a
-    * LogicalRDD otherwise HIDES these subtrees from executed-plan
+    * through [[materializeOnce]] / [[materializeLazy]] reports its
+    * PRE-reroot executed plan here. Re-rooting at a LogicalRDD
+    * otherwise HIDES these subtrees from executed-plan
     * audits (round-17 advice: as more call sites stage multi-consumer
     * frames, the audit's coverage silently shrinks). Never set on a
     * production path; the cost when unset is one null check.
@@ -74,23 +74,6 @@ object Stage {
       key: org.apache.spark.sql.Column): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p, key) else df
-  }
-
-  /** LAZY plan re-rooting — the codegen-stability half of
-    * [[materializeOnce]] without the eager job. The returned frame's
-    * plan starts at a LogicalRDD, so every DOWNSTREAM stage's
-    * generated source is identical no matter what per-batch literals
-    * (offset ranges, modulo filters) the input plan embeds — the
-    * codegen cache actually caches. Nothing executes here; the first
-    * consumer materializes (and, as a lazy local checkpoint, persists)
-    * the input rows inside its own job. Alias of [[materializeLazy]]
-    * kept for call-site intent: use this name when the POINT is the
-    * re-root and the persist is incidental (a micro-batch source read
-    * small enough that pinning it is free).
-    */
-  def rerootLazy(df: DataFrame): DataFrame = {
-    probe(df)
-    df.localCheckpoint(eager = false)
   }
 
   /** LAZY compute-once: the frame is lazily local-checkpointed —

@@ -46,8 +46,7 @@ object EmbedIngest {
     val spark = batch.sparkSession
     val root = new Path(indexPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IngestTuning.sectionTimer("emb-ingest", "meta")(
-      Dedup.embEnsureMeta(spark, indexPath, nBits, bands, seed, sourceTag))
+    Dedup.embEnsureMeta(spark, indexPath, nBits, bands, seed, sourceTag)
     val sigTarget = new Path(root, s"sig/batch=$batchId")
     val bucketsTarget = new Path(root, s"buckets/batch=$batchId")
     if (SnapshotCommit.isCommitted(fs, sigTarget) &&
@@ -70,10 +69,8 @@ object EmbedIngest {
     // intra-batch survivors → against-corpus probe → segment frames,
     // all over ONE signing pass ([[Dedup.embIngestSegmentFrames]]);
     // AQE off for the batch ([[IngestTuning.withBatchTuning]])
-    def dbg[T](name: String)(b: => T): T =
-      IngestTuning.sectionTimer("emb-ingest", name)(b)
     IngestTuning.withBatchTuning(spark) {
-      val (sig, buckets) = dbg("frames")(Dedup.embIngestSegmentFrames(
+      val (sig, buckets) = Dedup.embIngestSegmentFrames(
         batch,
         vecCol,
         idCol,
@@ -82,28 +79,24 @@ object EmbedIngest {
         maxBucketSize,
         probeCorpus =
           SegmentCompaction.hasSegments(spark, s"$indexPath/buckets"),
-        sourceTag))
+        sourceTag)
       val sigStaging = new Path(root, s"_staging/sig-$batchId")
       val bucketsStaging = new Path(root, s"_staging/buckets-$batchId")
       fs.delete(sigStaging, true)
       fs.delete(bucketsStaging, true)
       // concurrent staging writes — see NearDupIngest.ingestBatch
-      dbg("writes")(IngestTuning.parallelWrites(
+      IngestTuning.parallelWrites(
         () => IngestTuning.writeSegment(sig, sigStaging.toString),
         () =>
-          IngestTuning.writeSegment(buckets, bucketsStaging.toString)))
-      dbg("publish") {
-        SnapshotCommit.publish(fs, sigStaging, sigTarget)
-        SnapshotCommit.publish(fs, bucketsStaging, bucketsTarget)
-      }
+          IngestTuning.writeSegment(buckets, bucketsStaging.toString))
+      SnapshotCommit.publish(fs, sigStaging, sigTarget)
+      SnapshotCommit.publish(fs, bucketsStaging, bucketsTarget)
       // roll the probe's versioned frame cache forward with the frames
       // just committed (already RAM-materialized) — the next batch's
       // probe then reads NO delta segments from disk
-      dbg("extend") {
-        Dedup.extendIndexCache(spark, s"$indexPath/sig", s"batch=$batchId", sig)
-        Dedup.extendIndexCache(
-          spark, s"$indexPath/buckets", s"batch=$batchId", buckets)
-      }
+      Dedup.extendIndexCache(spark, s"$indexPath/sig", s"batch=$batchId", sig)
+      Dedup.extendIndexCache(
+        spark, s"$indexPath/buckets", s"batch=$batchId", buckets)
     }
   }
 

@@ -127,33 +127,6 @@ object IngestTuning {
     }
   }
 
-  /** Dev-only section timer for the ingest hot loops, enabled by
-    * GRAFT_CACHE_DEBUG (one implementation — Dedup and the ingest
-    * wrappers all route here so tags and job-description behavior
-    * cannot drift). Sections may nest (the ingest wrapper's `frames`
-    * contains Dedup's `gather`), so the job description restores to
-    * the PREVIOUS value, not null — otherwise the inner section would
-    * wipe the outer tag for the jobs that follow it.
-    */
-  def sectionTimer[T](scope: String, name: String)(body: => T): T =
-    if (!sys.env.contains("GRAFT_CACHE_DEBUG")) body
-    else {
-      val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"graft:$scope:$name")
-      val t0 = System.nanoTime()
-      // finally: this instruments the ingest hot loop, where fallback
-      // exceptions are EXPECTED (gather over budget) — a success-only
-      // restore would leak "graft:scope:name" onto every subsequent
-      // job of the thread
-      val r =
-        try body
-        finally sc.setJobDescription(prev)
-      System.err.println(
-        f"[$scope%s] $name%s ${(System.nanoTime() - t0) / 1e9}%5.2f s")
-      r
-    }
-
   def withBatchTuning[T](spark: SparkSession)(body: => T): T = {
     sessionLock(spark).synchronized {
       val prev = Tuned.map { case (k, _) => k -> spark.conf.getOption(k) }

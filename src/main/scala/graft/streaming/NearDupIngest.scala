@@ -85,18 +85,17 @@ object NearDupIngest {
     // naive minHashNearDup → dedupIncoming → minHashSegmentFrames
     // composition shingles and signs the batch three times); AQE off
     // for the batch ([[IngestTuning.withBatchTuning]])
-    def dbg[T](name: String)(b: => T): T =
-      IngestTuning.sectionTimer("ingest", name)(b)
     IngestTuning.withBatchTuning(spark) {
-      val (sig, buckets) = dbg("frames")(Dedup.mhIngestSegmentFrames(
+      val (sig, buckets) = Dedup.mhIngestSegmentFrames(
         batch,
         textCol,
         idCol,
         indexPath,
         threshold,
         maxBucketSize,
-        probeCorpus = hasSegments(spark, s"$indexPath/buckets"),
-        sourceTag = sourceTag))
+        probeCorpus =
+          SegmentCompaction.hasSegments(spark, s"$indexPath/buckets"),
+        sourceTag = sourceTag)
       val sigStaging = new Path(root, s"_staging/sig-$batchId")
       val bucketsStaging = new Path(root, s"_staging/buckets-$batchId")
       fs.delete(sigStaging, true)
@@ -104,34 +103,26 @@ object NearDupIngest {
       // stage the two independent writes CONCURRENTLY (both consume
       // the materialized survivors frame); publishes stay ordered
       // after both land, so the crash protocol is unchanged
-      dbg("writes")(IngestTuning.parallelWrites(
+      IngestTuning.parallelWrites(
         () => IngestTuning.writeSegment(sig, sigStaging.toString),
         () =>
-          IngestTuning.writeSegment(buckets, bucketsStaging.toString)))
-      dbg("publish") {
-        SnapshotCommit.publish(fs, sigStaging, sigTarget)
-        SnapshotCommit.publish(fs, bucketsStaging, bucketsTarget)
-      }
+          IngestTuning.writeSegment(buckets, bucketsStaging.toString))
+      SnapshotCommit.publish(fs, sigStaging, sigTarget)
+      SnapshotCommit.publish(fs, bucketsStaging, bucketsTarget)
       // roll the probe's versioned frame cache forward with the frames
       // just committed (already RAM-materialized) — the next batch's
       // probe then reads NO delta segments from disk
-      dbg("extend") {
-        Dedup.extendIndexCache(spark, s"$indexPath/sig", s"batch=$batchId", sig)
-        Dedup.extendIndexCache(
-          spark, s"$indexPath/buckets", s"batch=$batchId", buckets)
-      }
+      Dedup.extendIndexCache(spark, s"$indexPath/sig", s"batch=$batchId", sig)
+      Dedup.extendIndexCache(
+        spark, s"$indexPath/buckets", s"batch=$batchId", buckets)
     }
   }
-
-  private def hasSegments(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean = SegmentCompaction.hasSegments(spark, path)
 
   /** The ingested (surviving) doc ids, or None before the first commit. */
   def ingestedIds(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Option[DataFrame] =
-    if (!hasSegments(spark, s"$indexPath/sig")) None
+    if (!SegmentCompaction.hasSegments(spark, s"$indexPath/sig")) None
     else Some(spark.read.parquet(s"$indexPath/sig").select("id"))
 
   /** Consolidate committed `batch=<id>` segments into one `batch=c<maxId>`

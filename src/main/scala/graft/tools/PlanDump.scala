@@ -20,8 +20,7 @@ object PlanDump {
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = Session.initialize(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
     names.foreach { name =>
       val txt =
         try {

@@ -14,8 +14,7 @@ object Scratch {
     val name = if (args.nonEmpty) args(0) else "q14_minhash_neardup"
     val d = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = Session.initialize(32)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
 
     val stages =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Int)]

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Stress harness: prove the scale-twin protocols behave at 10× the
   * benchmarked corpus (the biggest jump local disk affords) instead of
@@ -38,20 +38,6 @@ import graft.SparkEntry
   * Results print as one JSON line per phase; STRESS.md records them.
   */
 object Stress {
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
 
   // ---- gen ----
 
@@ -97,8 +83,7 @@ object Stress {
         s"$MaxFactor distinct substitutions, beyond which replicas repeat " +
         "text verbatim and the near-dup ratios measure planted duplicates, " +
         "not the engine")
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
     def write(df: DataFrame, name: String, parts: Int): Unit =
       df.repartition(parts)
         .write.mode("overwrite")
@@ -256,8 +241,7 @@ object Stress {
       dir10x: String,
       reps: Int,
       only: Seq[String] = Nil): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
     val twins = if (only.isEmpty) Twins else Twins.filter(only.contains)
     // codegen/JIT warm-up at the smallest scale (plan-dependent, not
     // data-dependent — the Bench argument); fall back to dir1x when the
@@ -291,8 +275,7 @@ object Stress {
     * quantize projection; neither has a superlinear stage.
     */
   def builds(dir1x: String, dir10x: String, reps: Int): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
     val scratch = java.nio.file.Files
       .createTempDirectory("graft-stress-builds").toString
     def timeMin(body: => Unit): Double =
@@ -325,8 +308,7 @@ object Stress {
   // ---- skew ----
 
   def skew(dir10x: String): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
     import spark.implicits._
 
     // 100× the spec's component star: hub 7 with 40,000 spokes (the
@@ -397,8 +379,7 @@ object Stress {
   }
 
   def invariance(dir10x: String): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
     val exactTwins =
       Seq("q150_exact_heavy_hitters", "q166_minhash_survivors",
         "q168_global_cumsum", "q178_distinct_scalable",
@@ -470,8 +451,7 @@ object Stress {
     * (score = (id·2654435761) mod 1e6, ties to min id).
     */
   def survivors(scale: Int, reps: Int): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
     import graft.operators.Dedup
     def corpus(nDocs: Long): DataFrame = {
       val fams = nDocs / 10
@@ -578,8 +558,7 @@ object Stress {
     * oracle-verified.
     */
   def ingest(scale: Int, reps: Int): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
     import graft.streaming.NearDupIngest
     def corpus(nDocs: Long): DataFrame = {
       val fams = nDocs / 10
@@ -677,8 +656,7 @@ object Stress {
     * id then REPLAYS as a no-op at stress scale.
     */
   def embedIngest(scale: Int, reps: Int): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.initialize(Session.workers())
     import graft.streaming.EmbedIngest
     def corpus(nDocs: Long): DataFrame = {
       val fams = nDocs / 10

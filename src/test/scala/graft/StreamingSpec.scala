@@ -348,6 +348,57 @@ class StreamingSpec extends AnyFunSuite {
     assert(fused === Set(1L, 10L, 20L))
   }
 
+  test("mh forced-fallback: every job of the batch keeps the caller's job description") {
+    // the concurrent corpus probe runs on its own thread; its jobs must
+    // still carry the description that thread inherited from the caller
+    // (a profiler's per-op tag), not one the probe sets for itself
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import graft.streaming.NearDupIngest
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val idx = Files.createTempDirectory("graft-jobdesc").toString + "/mh"
+    val base =
+      "the quick brown fox jumps over the lazy dog again and again today " +
+        "while the river runs quietly past the old stone mill"
+    NearDupIngest.ingestBatch(
+      Seq((1L, base)).toDF("doc_id", "text"), idx, "text", "doc_id", 0L)
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = String.valueOf(e.properties.getProperty("spark.job.description"))
+        if (d == marker) markerSeen.countDown() else descs.add(d)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sys.props(graft.operators.Dedup.ForceUnfusedProp) = "1"
+      sc.setJobDescription("outer")
+      try NearDupIngest.ingestBatch(
+        Seq((2L, base + " extra"), (3L, "a wholly novel document"))
+          .toDF("doc_id", "text"),
+        idx, "text", "doc_id", 1L)
+      finally {
+        sc.setJobDescription(null)
+        sys.props.remove(graft.operators.Dedup.ForceUnfusedProp)
+      }
+      // one listener's events arrive in order: once the marker job's
+      // start is delivered, so is every job start of the batch
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val seen = descs.asScala.toSeq
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == "outer"), seen)
+    assert(
+      NearDupIngest.ingestedIds(spark, idx).get
+        .as[Long].collect().toSet === Set(1L, 3L))
+  }
+
   test("near-dup index compaction: one segment, exact bn, crash-replayable") {
     import spark.implicits._
     import graft.streaming.NearDupIngest
