@@ -108,8 +108,10 @@ object SparkEntry {
   // ---------------------------------------------------------------- Q9
   /** O6 series rolling apply, window 4, black-box polynomial UDF
     * x0 + x1^2 + x2^3 + x3^4 (reference tests/test_pandarallel.py:81-91).
-    * Exercises the arbitrary-window-UDF path (collect_list frame + UDF).
-    * Ungrouped total order = single-partition window (see Windows scaladoc).
+    * Exercises the arbitrary-window-UDF path: one streaming
+    * [[graft.ops.RollingApply]] operator over the sorted rows, `f` called
+    * on a view of each frame. Ungrouped total order = single-partition
+    * exchange (see Windows scaladoc).
     */
   private def q09(s: SparkSession, d: String): DataFrame =
     Windows
@@ -127,7 +129,8 @@ object SparkEntry {
   // ---------------------------------------------------------------- Q10
   /** O7 grouped rolling apply (reference tests/test_pandarallel.py:308-325):
     * Q9's polynomial partitioned by user_id — scales horizontally (hash
-    * exchange on user_id, windows evaluated per group).
+    * exchange on user_id, then the same streaming
+    * [[graft.ops.RollingApply]] operator evaluates each group's frames).
     */
   private def q10(s: SparkSession, d: String): DataFrame =
     Windows

@@ -25,8 +25,8 @@ import org.apache.spark.sql.types._
   */
 case class SqDequantizeExpr(
     child: Expression,
-    lo: Array[Double],
-    hi: Array[Double])
+    lo: IndexedSeq[Double],
+    hi: IndexedSeq[Double])
     extends UnaryExpression
     with CodegenFallback {
 
@@ -45,8 +45,12 @@ case class SqDequantizeExpr(
   override protected def withNewChildInternal(
       newChild: Expression): SqDequantizeExpr = copy(child = newChild)
 
+  // content-compared fields (two equal bound vectors canonicalize
+  // equal); the hot loops read flat copies
+  @transient private lazy val loA: Array[Double] = lo.toArray
+  @transient private lazy val hiA: Array[Double] = hi.toArray
   @transient private lazy val range: Array[Double] =
-    Array.tabulate(lo.length)(i => hi(i) - lo(i))
+    Array.tabulate(lo.length)(i => hiA(i) - loA(i))
 
   override def nullSafeEval(input: Any): Any = {
     val q = input.asInstanceOf[ArrayData]
@@ -58,7 +62,7 @@ case class SqDequantizeExpr(
     val m = math.min(qn, dims)
     while (i < m) {
       if (!q.isNullAt(i))
-        out(i) = lo(i) + ((q.getByte(i).toInt + 128).toDouble * range(i)) / 255.0
+        out(i) = loA(i) + ((q.getByte(i).toInt + 128).toDouble * range(i)) / 255.0
       i += 1
     }
     new GenericArrayData(out)
@@ -81,8 +85,8 @@ case class SqDequantizeExpr(
 case class SqDriftTermsExpr(
     left: Expression,
     right: Expression,
-    lo: Array[Double],
-    hi: Array[Double])
+    lo: IndexedSeq[Double],
+    hi: IndexedSeq[Double])
     extends BinaryExpression
     with CodegenFallback {
 
@@ -107,8 +111,12 @@ case class SqDriftTermsExpr(
       newRight: Expression): SqDriftTermsExpr =
     copy(left = newLeft, right = newRight)
 
+  // content-compared fields (two equal bound vectors canonicalize
+  // equal); the hot loops read flat copies
+  @transient private lazy val loA: Array[Double] = lo.toArray
+  @transient private lazy val hiA: Array[Double] = hi.toArray
   @transient private lazy val range: Array[Double] =
-    Array.tabulate(lo.length)(i => hi(i) - lo(i))
+    Array.tabulate(lo.length)(i => hiA(i) - loA(i))
 
   // BinaryExpression's default null propagation would drop the CLIP
   // count for a null-q8 / non-null-v row, but the composable clip fold
@@ -133,7 +141,7 @@ case class SqDriftTermsExpr(
       while (j0 < m0) {
         if (!v.isNullAt(j0)) {
           val x = v.getDouble(j0)
-          if (x < lo(j0) || x > hi(j0)) clip0 += 1.0
+          if (x < loA(j0) || x > hiA(j0)) clip0 += 1.0
         }
         j0 += 1
       }
@@ -155,7 +163,7 @@ case class SqDriftTermsExpr(
         if (q.isNullAt(i) || v.isNullAt(i)) ok = false
         else {
           val deq =
-            lo(i) + ((q.getByte(i).toInt + 128).toDouble * range(i)) / 255.0
+            loA(i) + ((q.getByte(i).toInt + 128).toDouble * range(i)) / 255.0
           s += math.abs(v.getDouble(i) - deq)
         }
         i += 1
@@ -170,7 +178,7 @@ case class SqDriftTermsExpr(
     while (j < m) {
       if (!v.isNullAt(j)) {
         val x = v.getDouble(j)
-        if (x < lo(j) || x > hi(j)) clip += 1.0
+        if (x < loA(j) || x > hiA(j)) clip += 1.0
       }
       j += 1
     }
@@ -331,8 +339,8 @@ object SqExpressions {
     org.apache.spark.sql.graftbridge.ExprBridge.column(
       SqDequantizeExpr(
         org.apache.spark.sql.graftbridge.ExprBridge.expression(q8),
-        lo.toArray,
-        hi.toArray))
+        lo.toIndexedSeq,
+        hi.toIndexedSeq))
 
   def encodeCols(v: Column, lo: Column, hi: Column): Column =
     org.apache.spark.sql.graftbridge.ExprBridge.column(
@@ -357,6 +365,6 @@ object SqExpressions {
       SqDriftTermsExpr(
         org.apache.spark.sql.graftbridge.ExprBridge.expression(q8),
         org.apache.spark.sql.graftbridge.ExprBridge.expression(v),
-        lo.toArray,
-        hi.toArray))
+        lo.toIndexedSeq,
+        hi.toIndexedSeq))
 }

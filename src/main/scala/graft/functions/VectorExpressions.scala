@@ -146,13 +146,14 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
   * survivors) is unchanged.
   *
   * The centroid matrix rides IN the expression (driver-built constant,
-  * k·dim doubles — model-sized, the LocalLookup precedent), flattened
-  * to one row-major array at construction so the hot loop reads a flat
-  * buffer.
+  * k·dim doubles — model-sized, the LocalLookup precedent), held as
+  * content-compared sequences (two equal matrices canonicalize equal)
+  * and flattened to one row-major array on first use so the hot loop
+  * reads a flat buffer.
   */
 case class NearestCentroidExpr(
     child: Expression,
-    centroids: Array[Array[Double]])
+    centroids: IndexedSeq[IndexedSeq[Double]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
 
@@ -178,10 +179,10 @@ case class NearestCentroidExpr(
       newChild: Expression): NearestCentroidExpr = copy(child = newChild)
 
   @transient private lazy val k = centroids.length
-  @transient private lazy val dims: Array[Int] = centroids.map(_.length)
+  @transient private lazy val dims: Array[Int] = centroids.map(_.length).toArray
   @transient private lazy val offsets: Array[Int] =
     dims.scanLeft(0)(_ + _).init
-  @transient private lazy val flat: Array[Double] = centroids.flatten
+  @transient private lazy val flat: Array[Double] = centroids.flatten.toArray
 
   // the UDF spec FAILED LOUDLY (NPE) on a null vector; a silent null
   // cluster here would flow a corrupt row into the index layout
@@ -226,7 +227,7 @@ object NearestCentroidExpr {
     org.apache.spark.sql.graftbridge.ExprBridge.column(
       NearestCentroidExpr(
         org.apache.spark.sql.graftbridge.ExprBridge.expression(c),
-        centroids))
+        centroids.map(_.toIndexedSeq).toIndexedSeq))
 }
 
 object VectorExpressions {

@@ -1616,8 +1616,6 @@ object Dedup {
       // the mhBanded contract): null bucket array, payload row kept
       when(col("mh").getItem(0).isNotNull, mhBucketArray(bands, rows))
         .as("bks"))
-    if (sys.env.contains("GRAFT_EXPLAIN"))
-      System.err.println(gathered.queryExecution.executedPlan.toString.take(8000))
     val rows0 = gatherCapped(gathered) match {
       case Some(rs) => rs
       case None =>

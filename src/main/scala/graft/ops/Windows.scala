@@ -28,14 +28,18 @@ import org.apache.spark.sql.functions._
   * 100 TB, express sequence locality with a partition key (as O7 does) or
   * with [[rollingAgg]] over a bucketed time key.
   *
-  * Arbitrary (non-algebraic) window UDFs: [[rollingCollect]] materializes
-  * the frame as an array (`collect_list` is size-bounded by the window
-  * width w, so memory is O(w) per row) and applies a Scala UDF — the
-  * general escape hatch mirroring the reference's black-box
-  * `rolling.apply(func)`. Prefer algebraic rewrite whenever the function
-  * is recognizable (SURVEY §7.4): for expanding windows especially,
-  * collect-based frames are O(n) per row and an algebraic `sum/avg/...`
-  * over the frame is the only shape that survives scale.
+  * Arbitrary (non-algebraic) window UDFs: [[rollingCollect]] runs the
+  * reference's black-box `rolling.apply(func)` as one operator,
+  * [[RollingApply]]: the same exchange + sort as a window, then one
+  * streaming pass per partition that keeps a ring of the last w values
+  * per group and hands `func` a view of the frame (O(w) memory per
+  * group, nothing materialized per row). The other black-box forms —
+  * [[rollingRangeCollect]], [[expandingCollect]], [[rollingTableApply]]
+  * — still materialize each frame with `collect_list` and apply a Scala
+  * UDF. Prefer algebraic rewrite whenever the function is recognizable
+  * (SURVEY §7.4): for expanding windows especially, collect-based
+  * frames are O(n) per row and an algebraic `sum/avg/...` over the
+  * frame is the only shape that survives scale.
   */
 object Windows {
 
@@ -59,8 +63,16 @@ object Windows {
     val base =
       if (partitionBy.isEmpty) Window.orderBy(orderBy: _*)
       else Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)
+    val (lo, hi) = rowBounds(window, center, closed)
+    base.rowsBetween(lo, hi)
+  }
+
+  /** Row offsets [lo, hi] of [[rollingFrame]]'s frame, relative to the
+    * current row.
+    */
+  def rowBounds(window: Int, center: Boolean, closed: String): (Int, Int) = {
     val offset = if (center) (window - 1) / 2 else 0
-    val (lo, hi) = closed match {
+    closed match {
       case "right"   => (offset - window + 1, offset)
       case "both"    => (offset - window, offset)
       case "left"    => (offset - window, offset - 1)
@@ -69,7 +81,6 @@ object Windows {
         throw new IllegalArgumentException(
           s"closed must be right|both|left|neither, got '$other'")
     }
-    base.rowsBetween(lo, hi)
   }
 
   /** pandas duration string → nanoseconds (the offset grammar of
@@ -151,10 +162,11 @@ object Windows {
   }
 
   /** Black-box UDF over a time-offset frame — pandas
-    * `rolling("24h").apply(f)`. Same trade as [[rollingCollect]]: the
-    * frame materializes as an array, but a duration window is bounded by
-    * the data rate within the offset, not a fixed row count — size the
-    * offset so the densest key's window fits (or switch to an algebraic
+    * `rolling("24h").apply(f)`. Unlike [[rollingCollect]], this form
+    * still materializes each frame as an array (`collect_list` + a
+    * Scala UDF), and a duration window is bounded by the data rate
+    * within the offset, not a fixed row count — size the offset so the
+    * densest key's window fits (or switch to an algebraic
     * [[rollingRangeAgg]]).
     */
   def rollingRangeCollect(
@@ -244,11 +256,19 @@ object Windows {
       withMinPeriods(agg(valueCol).over(frame), valueCol, frame, mp))
   }
 
-  /** Black-box rolling UDF: frame → Array[Double] → Scala function.
-    * Memory per row is O(window); the UDF runs outside codegen (same
-    * trade the reference makes for arbitrary Python). With
-    * `minPeriods < window` the UDF sees shorter arrays near edges —
-    * exactly pandas' rolling.apply contract.
+  /** Black-box rolling UDF — pandas `rolling(w).apply(f)` — as one
+    * [[RollingApply]] operator: after the window's exchange + sort, one
+    * streaming pass per partition with a ring of the frame's values per
+    * group, handing `f` a view of the frame (null values are left out
+    * of it and of the `minPeriods` count). Memory is
+    * O(window) per group; `f` runs outside codegen (same trade the
+    * reference makes for arbitrary Python) and must not keep the `Seq`
+    * it is given. With `minPeriods < window` `f` sees shorter frames
+    * near edges — exactly pandas' rolling.apply contract. Progress ticks
+    * once per `f` call (valid windows only) — the operator's work unit
+    * is the row; the reference's per-group unit
+    * (rolling_groupby.py:71-74) corresponds to the hash-exchange groups
+    * the task listener already tracks.
     */
   def rollingCollect(
       df: DataFrame,
@@ -262,19 +282,11 @@ object Windows {
       closed: String = "right",
       counter: Option[graft.progress.Progress.RowCounter] = None)(
       f: Seq[Double] => Double): DataFrame = {
-    val frame = rollingFrame(orderBy, partitionBy, window, center, closed)
-    val mp = minPeriods.getOrElse(window)
-    // progress ticks once per UDF invocation (valid windows only) —
-    // WindowExec's work unit is the row; the reference's per-group unit
-    // (rolling_groupby.py:71-74) corresponds to the hash-exchange groups
-    // the task listener already tracks
-    val g = counter match {
-      case None    => f
-      case Some(c) => (xs: Seq[Double]) => { c.tick(); f(xs) }
-    }
-    val fUdf = udf(g)
-    val arr = collect_list(valueCol).over(frame)
-    df.withColumn(outName, when(size(arr) >= mp, fUdf(arr)))
+    val (lo, hi) = rowBounds(window, center, closed)
+    RollingApply(
+      df, valueCol, orderBy, partitionBy,
+      RollingApply.Frame(lo, hi, minPeriods.getOrElse(window), f, counter),
+      outName)
   }
 
   /** Algebraic expanding (cumulative) aggregate per group. pandas
@@ -309,6 +321,8 @@ object Windows {
     * [[expandingAgg]] instead — O(1) state per row, the only shape that
     * survives unbounded group sizes. Size groups (the partition keys)
     * so the largest group's full history fits in a task when using this.
+    * (It keeps the `collect_list` plan; [[rollingCollect]]'s streaming
+    * operator covers fixed-row frames only.)
     */
   def expandingCollect(
       df: DataFrame,
@@ -377,11 +391,11 @@ object Windows {
     * `WindowExec` — one exchange + one sort regardless of k. The UDF
     * receives the matrix COLUMN-major (`cols(j)(i)` = column j, row i
     * of the frame, frame rows in window order) — the natural Spark
-    * shape; transpose inside `f` if row-major is wanted. Cost is the
-    * [[rollingCollect]] trade times k: O(w·k) memory per row — the
-    * honest price of an arbitrary multi-column function; if `f` is
-    * recognizable as per-column algebra or a pair aggregate, use
-    * [[rollingAgg]] / [[rollingAgg2]] instead.
+    * shape; transpose inside `f` if row-major is wanted. Unlike
+    * [[rollingCollect]], this form keeps the `collect_list` plan: O(w·k)
+    * memory per row — the honest price of an arbitrary multi-column
+    * function; if `f` is recognizable as per-column algebra or a pair
+    * aggregate, use [[rollingAgg]] / [[rollingAgg2]] instead.
     */
   def rollingTableApply(
       df: DataFrame,

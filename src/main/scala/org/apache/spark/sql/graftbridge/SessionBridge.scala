@@ -1,12 +1,15 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 
 /** Bridge into two `private[sql]` seams of the classic Spark session
   * (standard ecosystem pattern — a package-scoped object inside
   * `org.apache.spark.sql` compiled against the public Spark OSS jars):
-  * session cloning and plan re-binding.
+  * session cloning and plan re-binding. [[logicalPlan]] / [[ofRows]]
+  * let an operator wrap a frame's plan in its own logical node
+  * ([[graft.ops.RollingApply]]).
   *
   * Why it exists: a SQL conf is read at EXECUTION time from the
   * session a Dataset is bound to, so scoping a conf override to one
@@ -37,4 +40,12 @@ object SessionBridge {
     confs.foreach { case (k, v) => cloned.conf.set(k, v) }
     f(Dataset.ofRows(cloned, classic.logicalPlan))
   }
+
+  /** The analyzed logical plan behind `df`. */
+  def logicalPlan(df: DataFrame): LogicalPlan =
+    df.asInstanceOf[Dataset[Row]].logicalPlan
+
+  /** A frame over `plan` on `df`'s session. */
+  def ofRows(df: DataFrame, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(df.asInstanceOf[Dataset[Row]].sparkSession, plan)
 }

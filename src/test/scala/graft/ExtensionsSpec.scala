@@ -2095,4 +2095,25 @@ class ExtensionsSpec extends AnyFunSuite {
       .count()
     assert(diff === 0L)
   }
+
+  test("driver-constant vectors compare by content: equal instances are semanticEquals") {
+    // two expressions built from equal (but separately allocated)
+    // constants must canonicalize equal — Array fields compare by
+    // reference and would make them distinct plans
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.graftbridge.ExprBridge
+    import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType}
+    val v = ExprBridge.column(AttributeReference("v", ArrayType(DoubleType))())
+    val q8 = ExprBridge.column(AttributeReference("q8", ArrayType(ByteType))())
+    def twice(build: () => org.apache.spark.sql.Column): Unit = {
+      val (a, b) = (ExprBridge.expression(build()), ExprBridge.expression(build()))
+      assert(a.semanticEquals(b), s"$a vs $b")
+    }
+    twice(() => graft.functions.NearestCentroidExpr
+      .ofColumn(v, Array(Array(1.0, 2.0), Array(-3.0, 4.5))))
+    twice(() => graft.functions.SqExpressions
+      .dequantize(q8, Array(0.0, -1.0).toSeq, Array(2.0, 3.0).toSeq))
+    twice(() => graft.functions.SqExpressions
+      .driftTerms(q8, v, Array(0.0, -1.0).toSeq, Array(2.0, 3.0).toSeq))
+  }
 }

@@ -1,14 +1,18 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ops.{RollingApplyExec, Windows}
 
 /** Physical-plan assertions — the scale contract, checked, not assumed:
   * filters/projections reach the parquet scan, small dims broadcast,
   * aggregates are partial+final, hot expressions stay in codegen.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
 
   private def plan(df: DataFrame): String =
@@ -421,5 +425,33 @@ class PlanSpec extends AnyFunSuite {
     assert(
       !p.contains("SinglePartition"),
       s"scalable prefix sum must not funnel through one partition:\n$p")
+  }
+
+  private def rollingOps(df: DataFrame): Seq[RollingApplyExec] =
+    collect(df.queryExecution.executedPlan) { case r: RollingApplyExec => r }
+
+  test("black-box rolling (q09, q10) streams in RollingApplyExec over a Sort, no collect_list") {
+    Seq("q09_rolling", "q10_grouped_rolling").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, TestSpark.sf)
+      val p = plan(df)
+      val ops = rollingOps(df)
+      assert(ops.size === 1, s"$q expected one RollingApplyExec in:\n$p")
+      assert(
+        ops.head.child.isInstanceOf[SortExec],
+        s"$q expected RollingApplyExec directly above a Sort in:\n$p")
+      assert(!p.contains("collect_list"), s"$q must not collect frames:\n$p")
+    }
+  }
+
+  test("a session built without GraftExtensions plans RollingApplyExec") {
+    // TestSpark's session has no extensions; a new session also has no
+    // strategy registered yet — the first rolling apply registers it
+    val fresh = spark.newSession()
+    val df = fresh.range(10).toDF("i").withColumn("v", col("i") * 1.5)
+    val out = Windows.rollingCollect(df, col("v"), Seq(col("i")), Nil, 3, "r")(_.sum)
+    assert(rollingOps(out).size === 1, plan(out))
+    val got = out.orderBy("i").select("r").collect().map(r => Option(r.get(0)))
+    assert(got.take(3).toSeq === Seq(None, None, Some(1.5 * (0 + 1 + 2))))
+    assert(got.last === Some(1.5 * (7 + 8 + 9)))
   }
 }
