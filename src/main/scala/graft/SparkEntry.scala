@@ -597,9 +597,10 @@ object SparkEntry {
     graft.operators.Sampling.vocabulary(Tables.documents(s, d), "doc_id", "text")
 
   /** Q9's total-order rolling window again, via the SCALABLE path
-    * (range-partitioned overlap protocol, ops/Windows.rollingGlobalScalable)
-    * instead of the single-partition WindowExec — same oracle, both in
-    * the bench so the two strategies stay comparable.
+    * (ops/Windows.rollingGlobalScalable: range exchange + sort, then the
+    * rolling operator's chunk-plus-margin protocol, one task per range)
+    * instead of q09's single partition — same oracle, both in the bench
+    * so the two strategies stay comparable.
     */
   private def q30(s: SparkSession, d: String): DataFrame =
     Windows.rollingGlobalScalable(

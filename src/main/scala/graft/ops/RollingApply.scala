@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
@@ -22,7 +23,9 @@ import org.apache.spark.sql.catalyst.plans.physical.{
   AllTuples,
   ClusteredDistribution,
   Distribution,
-  Partitioning
+  OrderedDistribution,
+  Partitioning,
+  UnknownPartitioning
 }
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.SessionBridge
@@ -34,15 +37,20 @@ import graft.progress.Progress.RowCounter
   * pandas `rolling(w, center, closed, min_periods).apply(f)`, where
   * pandas hands `f` a view of each window and copies nothing per row.
   *
-  * The operator asks for what `WindowExec` asks for — all rows in one
-  * partition when there are no keys, clustered by the keys otherwise,
-  * each partition sorted by keys ++ order — so `EnsureRequirements`
-  * plans the same Exchange + Sort (AQE coalescing included). It then
-  * streams each sorted partition ONCE: per group, a ring of primitive
-  * doubles (with null flags) covering the frame, one reusable
+  * With keys the operator asks for what `WindowExec` asks for — rows
+  * clustered by the keys, each partition sorted by keys ++ order — so
+  * `EnsureRequirements` plans the same hash Exchange + Sort. Without
+  * keys it takes the input as it is when the input is already
+  * range-partitioned and sorted by the order (and deterministic): one
+  * task per input partition, each reading a few rows ahead into the
+  * partitions after its own — the reference's chunk-plus-margin
+  * protocol ([[RollingApplyExec]]). Any other ungrouped input is
+  * gathered into one sorted partition (`Exchange SinglePartition` +
+  * Sort). Each task then streams its rows ONCE: per group, a ring of
+  * primitive doubles (with null flags) covering the frame, one reusable
   * `IndexedSeq[Double]` view handed to `f`, and one `UnsafeProjection`
-  * writing the input row with the result in its slot column. No per-row frame array, no boxed `Seq`, no
-  * frame re-aggregation.
+  * writing the input row with the result in its slot column. No
+  * per-row frame array, no boxed `Seq`, no frame re-aggregation.
   *
   * Output equals the `collect_list` + UDF form bit for bit (the test
   * suite keeps that form as its oracle): null values are left out of
@@ -69,6 +77,9 @@ object RollingApply {
     require(
       lo == 0 || hi == 0 || lo <= hi,
       s"The lower bound of a window frame must be less than or equal to the upper bound: [$lo, $hi]")
+
+    /** Rows before the current one that the frame reaches. */
+    def behind: Int = math.max(0, -lo)
 
     def apply(xs: Seq[Double]): Double = {
       counter.foreach(_.tick())
@@ -161,7 +172,25 @@ object RollingApply {
   }
 }
 
-/** Physical side of [[RollingApply]]. */
+/** Physical side of [[RollingApply]], in one of three plans:
+  *  - keys: `ClusteredDistribution(keys)`, each partition sorted by
+  *    keys ++ order — the hash exchange deals whole groups to tasks;
+  *  - no keys, and the child already range-partitioned and sorted by
+  *    the order, with no nondeterministic expression in its tree: the
+  *    child as it is (no exchange, no sort). Task `i` streams its own
+  *    partition, then reads ahead into the partitions after it (lazily,
+  *    across short and empty ones) until its last frame is complete.
+  *    With `L = max(0, -lo)` and `s_i` the global position of partition
+  *    `i`'s first row, it emits the rows at global positions
+  *    `[s_i + L, s_{i+1} + L)`: its first `L` rows only warm the ring,
+  *    since the task before it emits them (task 0 emits from 0, the
+  *    last task to the end). Reading ahead costs at most `L + max(0,
+  *    hi)` rows of the next partitions over a pipelined child (scan,
+  *    project, filter, cache) and one more sort of the next partition
+  *    over a Sort. Rows cross partition boundaries, so the output
+  *    partitioning is unknown when there is more than one partition;
+  *  - no keys otherwise: `AllTuples`, one sorted partition.
+  */
 final case class RollingApplyExec(
     value: Expression,
     partitionSpec: Seq[Expression],
@@ -173,30 +202,50 @@ final case class RollingApplyExec(
 
   override def output: Seq[Attribute] = child.output
 
+  /** Ungrouped, and the child is already in the order the frames
+    * need and gives the same rows when a partition is read twice (each
+    * task re-reads the start of the partitions after its own).
+    */
+  private lazy val rangeOrdered: Boolean =
+    partitionSpec.isEmpty &&
+      child.outputPartitioning.satisfies(OrderedDistribution(orderSpec)) &&
+      SortOrder.orderingSatisfies(child.outputOrdering, orderSpec) &&
+      child.find(_.expressions.exists(!_.deterministic)).isEmpty
+
   override def requiredChildDistribution: Seq[Distribution] =
-    if (partitionSpec.isEmpty) AllTuples :: Nil
-    else ClusteredDistribution(partitionSpec) :: Nil
+    if (partitionSpec.nonEmpty) ClusteredDistribution(partitionSpec) :: Nil
+    else if (rangeOrdered) OrderedDistribution(orderSpec) :: Nil
+    else AllTuples :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     Seq(partitionSpec.map(SortOrder(_, Ascending)) ++ orderSpec)
 
-  // rows leave in the order they arrive
+  // rows leave each task in the order they arrive
   override def outputOrdering: Seq[SortOrder] = child.outputOrdering
-  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def outputPartitioning: Partitioning = child.outputPartitioning match {
+    case p if rangeOrdered && p.numPartitions > 1 => UnknownPartitioning(p.numPartitions)
+    case p => p
+  }
 
   override protected def doExecute(): RDD[InternalRow] = {
     val in = child.output
     val result = AttributeReference("result", DoubleType)()
     val filled = in.map(a => if (a.exprId == slot.exprId) result else a)
     val (v, keys, fr) = (value, partitionSpec, frame)
-    child.execute().mapPartitions { rows =>
+    val rows = (own: Iterator[InternalRow], ahead: Iterator[InternalRow], skip: Int) =>
       new RollingApplyExec.Rows(
-        rows,
+        own,
+        ahead,
+        skip,
         UnsafeProjection.create(Seq(v), in),
         if (keys.isEmpty) null else UnsafeProjection.create(keys, in),
         UnsafeProjection.create(filled, in :+ result),
         fr)
-    }
+    if (rangeOrdered)
+      new RollingApplyExec.LookAheadRDD(
+        child.execute(),
+        (i, own, ahead) => rows(own, ahead, if (i == 0) 0 else fr.behind))
+    else child.execute().mapPartitions(rows(_, Iterator.empty, 0))
   }
 
   override protected def withNewChildInternal(c: SparkPlan): RollingApplyExec =
@@ -215,12 +264,44 @@ object RollingApplyExec {
         s"$i is out of bounds (min 0, max ${length - 1})")
   }
 
-  /** One pass over a partition sorted by keys ++ order. Row `i` of a
-    * group leaves once row `i + hi` has been read (or the group has
-    * ended); rows read ahead of it wait, copied, in `pending`.
+  /** Partition `i` of `prev`, handed to `f` with a lazy iterator over
+    * the partitions after it. A narrow dependency on all of them: no
+    * shuffle and no side job; a partition after `i` is computed only if
+    * `f` reads into it.
+    */
+  private final class LookAheadRDD(
+      prev: RDD[InternalRow],
+      f: (Int, Iterator[InternalRow], Iterator[InternalRow]) => Iterator[InternalRow])
+      extends RDD[InternalRow](prev.context, new LookAhead(prev) :: Nil) {
+    // kept with the RDD, which ships to the executors: they cannot
+    // compute the parent's partitions themselves
+    private val parts = prev.partitions
+    override protected def getPartitions: Array[Partition] = parts
+    override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] = {
+      val parent = firstParent[InternalRow]
+      val ahead = Iterator
+        .range(split.index + 1, parts.length)
+        .flatMap(j => parent.iterator(parts(j), ctx))
+      f(split.index, parent.iterator(split, ctx), ahead)
+    }
+  }
+
+  private final class LookAhead(rdd: RDD[InternalRow]) extends NarrowDependency(rdd) {
+    override def getParents(i: Int): Seq[Int] = i until rdd.partitions.length
+  }
+
+  /** One pass over a stream sorted by keys ++ order: `own` (a
+    * partition), then `ahead` (the partitions after it; empty with
+    * keys). Row `i` of a group leaves once row `i + hi` has been read
+    * (or the group has ended); rows read ahead of it wait, copied, in
+    * `pending`. The stream's first `skip` rows only fill the ring, and
+    * emission stops `frame.behind` rows past the end of `own`, so
+    * `ahead` is read only as far as the last emitted frame needs.
     */
   private final class Rows(
-      rows: Iterator[InternalRow],
+      own: Iterator[InternalRow],
+      ahead: Iterator[InternalRow],
+      skip: Int,
       valueOf: UnsafeProjection,
       keyOf: UnsafeProjection, // null when ungrouped
       emit: UnsafeProjection,
@@ -240,8 +321,21 @@ object RollingApplyExec {
     private var key: UnsafeRow = null
     private var carry: InternalRow = null // first row of the next group
     private var n = 0 // rows of the current group read
-    private var emitted = 0 // rows of the current group emitted
+    private var emitted = 0 // rows of the current group emitted or skipped
     private var ended = true // no more rows in the current group
+    private var src = own
+    private var stop = Int.MaxValue // no row from here on is emitted
+
+    /** Whether the stream has another row worth reading. Leaving `own`
+      * fixes `stop`: the first `frame.behind` rows after `own` are this
+      * task's to emit.
+      */
+    private def more: Boolean =
+      src.hasNext || (src eq own) && {
+        stop = n + frame.behind
+        src = ahead
+        emitted < stop && src.hasNext
+      }
 
     private def append(r: InternalRow): Unit = {
       val x = valueOf(r)
@@ -253,24 +347,28 @@ object RollingApplyExec {
     }
 
     override def hasNext: Boolean = {
-      while (!(emitted < n && (ended || emitted + hi < n))) {
-        if (ended) {
+      while (math.max(emitted, skip) < stop) {
+        if (emitted < n && (ended || emitted + hi < n)) {
+          if (emitted >= skip) return true
+          if (hi > 0) pending.removeFirst()
+          emitted += 1
+        } else if (ended) {
           if (carry == null) {
-            if (!rows.hasNext) return false
-            carry = rows.next()
+            if (!more) return false
+            carry = src.next()
           }
           n = 0; emitted = 0; ended = false
           if (keyOf != null) key = keyOf(carry).copy()
           append(carry)
           carry = null
-        } else if (!rows.hasNext) ended = true
+        } else if (!more) ended = true
         else {
-          val r = rows.next()
+          val r = src.next()
           if (keyOf != null && keyOf(r) != key) { ended = true; carry = r }
           else append(r)
         }
       }
-      true
+      false
     }
 
     override def next(): InternalRow = {

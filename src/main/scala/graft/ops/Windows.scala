@@ -23,17 +23,26 @@ import org.apache.spark.sql.functions._
   * Scale posture: the *grouped* variants (O7/O8 — partitionBy(groupKeys))
   * scale horizontally: one hash exchange, then each group's window is
   * evaluated locally. The *ungrouped* Series variant (O6) implies a total
-  * order, which Spark plans as a single-partition window — correct but a
-  * scale bottleneck, exactly like pandas' single global sequence. For
-  * 100 TB, express sequence locality with a partition key (as O7 does) or
-  * with [[rollingAgg]] over a bucketed time key.
+  * order. A declared window plans it as a single-partition window —
+  * correct but a scale bottleneck, exactly like pandas' single global
+  * sequence. [[rollingCollect]] avoids the funnel when its input is
+  * already range-partitioned and sorted by the order (`spark.range`,
+  * `orderBy`, `repartitionByRange` + `sortWithinPartitions`, or a cache
+  * of one): it then runs the reference's chunk-plus-margin protocol, one
+  * task per range; [[rollingGlobalScalable]] range-partitions any input
+  * first. For algebraic aggregates at 100 TB, express sequence locality
+  * with a partition key (as O7 does) or with [[rollingAgg]] over a
+  * bucketed time key.
   *
   * Arbitrary (non-algebraic) window UDFs: [[rollingCollect]] runs the
   * reference's black-box `rolling.apply(func)` as one operator,
-  * [[RollingApply]]: the same exchange + sort as a window, then one
-  * streaming pass per partition that keeps a ring of the last w values
-  * per group and hands `func` a view of the frame (O(w) memory per
-  * group, nothing materialized per row). The other black-box forms —
+  * [[RollingApply]]: with keys, the same exchange + sort as a window;
+  * without keys, no exchange and no sort on a range-ordered input (each
+  * task reads the first rows of the ranges after its own for its last
+  * frames) and one sorted partition otherwise. Then one streaming pass
+  * per partition keeps a ring of the last w values per group and hands
+  * `func` a view of the frame (O(w) memory per group, nothing
+  * materialized per row). The other black-box forms —
   * [[rollingRangeCollect]], [[expandingCollect]], [[rollingTableApply]]
   * — still materialize each frame with `collect_list` and apply a Scala
   * UDF. Prefer algebraic rewrite whenever the function is recognizable
@@ -120,7 +129,8 @@ object Windows {
     *
     * Scale posture: identical to any grouped window — one exchange on the
     * partition keys; ungrouped use collapses to one partition (same
-    * caveat as [[rollingFrame]], same [[rollingGlobalScalable]] escape).
+    * caveat as [[rollingFrame]]). Unlike fixed-row frames it has no
+    * range-ordered path: a duration frame's row margin is unbounded.
     */
   def rollingRangeFrame(
       orderBy: Column,
@@ -257,10 +267,16 @@ object Windows {
   }
 
   /** Black-box rolling UDF — pandas `rolling(w).apply(f)` — as one
-    * [[RollingApply]] operator: after the window's exchange + sort, one
-    * streaming pass per partition with a ring of the frame's values per
-    * group, handing `f` a view of the frame (null values are left out
-    * of it and of the `minPeriods` count). Memory is
+    * [[RollingApply]] operator: one streaming pass per partition with a
+    * ring of the frame's values per group, handing `f` a view of the
+    * frame (null values are left out of it and of the `minPeriods`
+    * count). With `partitionBy` keys the rows first go through the
+    * window's hash exchange + sort. Without keys, an input already
+    * range-partitioned and sorted by `orderBy` (and deterministic) is
+    * read as it is, one task per partition, each reading at most
+    * `window` rows of the partitions after its own for its last frames
+    * (pandarallel's chunk-plus-margin protocol); any other ungrouped
+    * input is gathered into one sorted partition. Memory is
     * O(window) per group; `f` runs outside codegen (same trade the
     * reference makes for arbitrary Python) and must not keep the `Seq`
     * it is given. With `minPeriods < window` `f` sees shorter frames
@@ -917,28 +933,22 @@ object Windows {
     }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 
-  /** SCALABLE total-order rolling window — the distributed answer to the
-    * one operator Spark's `WindowExec` cannot parallelize (an ungrouped
-    * `Window.orderBy` collapses to a single partition).
+  /** SCALABLE total-order rolling window — pandas' ungrouped
+    * `rolling(w).apply(f)` without the single-partition funnel an
+    * ungrouped `Window.orderBy` plans. The frame is range-partitioned
+    * and sorted by the order key (the one exchange any global sort
+    * pays), then [[rollingCollect]] runs on it: its operator sees a
+    * range-ordered input and applies the reference's chunk-plus-margin
+    * protocol (utils.py:9-58 `start_offset`, series_rolling.py:16,47)
+    * — each task streams its own range and reads the first rows of the
+    * ranges after it for its last frames, with no second exchange, no
+    * driver collect and no broadcast. The read-ahead sorts each range
+    * a second time, in the task before it (in parallel; it stops after
+    * the first rows); a cached sorted input reads them from the cache
+    * instead. Output matches the single-partition window exactly, null
+    * values included (left out of the frame, as in [[rollingCollect]]).
     *
-    * This is the reference's own overlapped-chunk protocol
-    * (utils.py:9-58 `start_offset`, series_rolling.py:16,47) re-expressed
-    * on Spark primitives:
-    *   1. range-partition + sort by the order key (one exchange — the
-    *      same cost any global sort pays);
-    *   2. collect each partition's LAST (w-1) (order, value) pairs — a
-    *      few KB per partition — and broadcast them;
-    *   3. per partition, prepend the previous partition's tail, run the
-    *      windows, and emit outputs only for own rows.
-    * The sorted frame is materialized eagerly ([[Stage.materializeOnce]]:
-    * localCheckpoint locally, reliable checkpoint on a cluster with a
-    * checkpoint dir), so the range exchange + sort runs ONCE and both
-    * passes (tails, compute) read materialized blocks — at 100 TB a
-    * re-run of the global sort would double the job. Local blocks are
-    * freed by the ContextCleaner when the frame goes out of scope.
-    * Output matches the single-partition window exactly.
-    *
-    * @param orderCol  numeric total-order key (must be globally sortable)
+    * @param orderCol  total-order key (must be globally sortable)
     */
   def rollingGlobalScalable(
       df: DataFrame,
@@ -947,62 +957,20 @@ object Windows {
       window: Int,
       outName: String,
       numPartitions: Int = 0)(f: Seq[Double] => Double): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-
-    val spark = df.sparkSession
     val n =
       if (numPartitions > 0) numPartitions
-      else spark.sparkContext.defaultParallelism
+      else df.sparkSession.sparkContext.defaultParallelism
     val sorted = df
+      .select(Seq(orderCol, valueCol).distinct.map(col): _*)
       .repartitionByRange(n, col(orderCol))
       .sortWithinPartitions(orderCol)
-      .select(col(orderCol).cast("long").as("__ord"), col(valueCol).cast("double").as("__v"))
-      .transform(Stage.materializeOnce) // sort runs once; both passes reuse it
-
-    // pass 1: last (w-1) values of each partition (KBs total). The carry
-    // for partition i is the last (w-1) values of the WHOLE prefix —
-    // chained driver-side so partitions smaller than w-1 rows stay
-    // correct (their predecessor's tail alone would be short).
-    val tails: Array[(Int, Array[Double])] = sorted.rdd
-      .mapPartitionsWithIndex { (i, it) =>
-        val buf = new scala.collection.mutable.ArrayDeque[Double](window)
-        it.foreach { r =>
-          buf.append(r.getDouble(1))
-          if (buf.size > window - 1) buf.removeHead()
-        }
-        Iterator.single(i -> buf.toArray)
-      }
-      .collect()
-    val byIndex = tails.sortBy(_._1).map(_._2)
-    val carries: Array[Array[Double]] =
-      byIndex.scanLeft(Array.empty[Double]) { (prefix, t) =>
-        (prefix ++ t).takeRight(window - 1)
-      } // carries(i) = last w-1 values before partition i
-    val bCarries = spark.sparkContext.broadcast(carries)
-
-    // pass 2: compute windows with the prefix carry prepended
-    val outRows = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
-      val ring = new scala.collection.mutable.ArrayDeque[Double](window)
-      bCarries.value(i).foreach(ring.append)
-      it.map { r =>
-        ring.append(r.getDouble(1))
-        if (ring.size > window) ring.removeHead()
-        val v: Any = if (ring.size >= window) f(ring.toSeq) else null
-        Row(r.getLong(0), v)
-      }
-    }
-    spark.createDataFrame(
-      outRows,
-      StructType(
-        Seq(
-          StructField("__ord", org.apache.spark.sql.types.LongType),
-          StructField(outName, DoubleType))))
-      .withColumnRenamed("__ord", orderCol)
+    rollingCollect(sorted, col(valueCol), Seq(col(orderCol)), Nil, window, outName)(f)
+      .select(orderCol, outName)
   }
 
-  /** SCALABLE ungrouped prefix sum — [[rollingGlobalScalable]]'s carry
-    * protocol applied to the UNBOUNDED frame (pandas ungrouped
+  /** SCALABLE ungrouped prefix sum — a carry protocol for the
+    * UNBOUNDED frame, which has no finite margin for
+    * [[rollingGlobalScalable]]'s read-ahead (pandas ungrouped
     * `.cumsum()` / SQL `sum() OVER (ORDER BY … ROWS UNBOUNDED
     * PRECEDING)`), which Spark's `WindowExec` would otherwise collapse
     * to a single partition. The classic two-phase parallel scan, on

@@ -57,4 +57,25 @@ class GlobalRollingSpec extends AnyFunSuite {
     assert(got(4L) === Some(1.0 + 2 + 3 + 4))
     assert(got(10L) === Some(7.0 + 8 + 9 + 10))
   }
+
+  test("null values leave the frame, as in rollingCollect") {
+    // every fifth value null: a 3-row frame holding it has 2 values,
+    // below minPeriods, so those rows are null
+    val df = (1L to 40L)
+      .map(i => (i, if (i % 5 == 2) None else Some(i * 1.5)))
+      .toDF("t", "value")
+    val want = Windows
+      .rollingCollect(df, col("value"), Seq(col("t")), Nil, 3, "v")(_.sum)
+      .select("t", "v")
+      .as[(Long, Option[Double])]
+      .collect()
+      .toMap
+    val got = Windows
+      .rollingGlobalScalable(df, "t", "value", 3, "v", numPartitions = 6)(_.sum)
+      .as[(Long, Option[Double])]
+      .collect()
+      .toMap
+    assert(got === want)
+    assert(want.values.count(_.isDefined) === 15)
+  }
 }

@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -348,8 +350,8 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       p09.contains("SinglePartition"),
       s"q09 expected the deliberate single-partition window in:\n$p09")
     // q30 (same output, rollingGlobalScalable) never funnels to one
-    // partition: the sort is range-partitioned and the result is a
-    // partitioned RDD scan
+    // partition: the sort is range-partitioned and the rolling operator
+    // runs one task per range
     val p30 = plan(SparkEntry.queries("q30_rolling_scalable")(spark, TestSpark.sf))
     assert(
       !p30.contains("SinglePartition"),
@@ -453,5 +455,34 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val got = out.orderBy("i").select("r").collect().map(r => Option(r.get(0)))
     assert(got.take(3).toSeq === Seq(None, None, Some(1.5 * (0 + 1 + 2))))
     assert(got.last === Some(1.5 * (7 + 8 + 9)))
+  }
+
+  test("ungrouped rolling over a range-ordered cached frame plans no Exchange and no Sort") {
+    val df = spark.range(0, 30, 1, 3).withColumn("v", col("id") * 0.5).cache()
+    try {
+      df.count()
+      val out = Windows.rollingCollect(df, col("v"), Seq(col("id")), Nil, 4, "r")(_.sum)
+      val ops = rollingOps(out)
+      assert(ops.size === 1, plan(out))
+      assert(collect(ops.head) { case e: Exchange => e }.isEmpty, plan(out))
+      assert(collect(ops.head) { case s: SortExec => s }.isEmpty, plan(out))
+    } finally df.unpersist(blocking = true)
+  }
+
+  test("ungrouped rolling over a repartition(3) frame still funnels to one partition") {
+    val df = spark.range(0, 30, 1, 3).withColumn("v", col("id") * 0.5).repartition(3)
+    val p = plan(Windows.rollingCollect(df, col("v"), Seq(col("id")), Nil, 4, "r")(_.sum))
+    assert(p.contains("Exchange SinglePartition"), p)
+  }
+
+  test("q30 runs RollingApplyExec over a range Exchange + Sort, with no RDD re-root") {
+    val df = SparkEntry.queries("q30_rolling_scalable")(spark, TestSpark.sf)
+    val p = plan(df)
+    val ops = rollingOps(df)
+    assert(ops.size === 1, p)
+    assert(collect(ops.head) { case s: SortExec => s }.size === 1, p)
+    val exchanges = collect(ops.head) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(exchanges.size === 1 && exchanges.head.isInstanceOf[RangePartitioning], p)
+    assert(!p.contains("ExistingRDD") && !p.contains("LogicalRDD"), p)
   }
 }

@@ -1,12 +1,16 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, SinglePartition}
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.functions.{col, lit, pmod, rand, sin, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-import graft.ops.Windows
+import graft.ops.{RollingApplyExec, Windows}
 import graft.progress.Progress
 
 /** Differential spec of the streaming rolling-apply operator against
@@ -20,8 +24,12 @@ import graft.progress.Progress
   *
   * Configurations are batched into wide frames (one output column per
   * configuration) so the sweep costs dozens of jobs, not hundreds.
+  *
+  * Ungrouped frames that are already range-partitioned and sorted by
+  * the order take the chunk-plus-margin plan (no exchange, no sort);
+  * their sweeps also check that the rows come out in global order.
   */
-class RollingApplySpec extends AnyFunSuite {
+class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -85,12 +93,12 @@ class RollingApplySpec extends AnyFunSuite {
   private def run(
       rolling: Rolling,
       batch: Seq[(Int, Boolean, String, Option[Int])],
+      input: DataFrame,
       grouped: Boolean,
-      parts: Int,
       name: String): (Map[Long, Seq[Option[Long]]], Long) = {
     val counter = Progress.rowCounter(spark, name)
     val keys = if (grouped) Seq(col("k")) else Nil
-    val out = batch.zipWithIndex.foldLeft(data.repartition(parts)) {
+    val out = batch.zipWithIndex.foldLeft(input) {
       case (df, ((w, center, closed, mp), i)) =>
         rolling(df, keys, w, s"c$i", mp, center, closed, Some(counter))
     }
@@ -111,21 +119,133 @@ class RollingApplySpec extends AnyFunSuite {
   } test(s"bit-identical to collect_list + UDF (grouped=$grouped, $parts partitions)") {
     configs.grouped(32).zipWithIndex.foreach { case (batch, b) =>
       val tag = s"grouped=$grouped parts=$parts batch=$b"
-      val (got, ticks) = run(viaOperator, batch, grouped, parts, s"op-$tag")
-      val (want, refTicks) = run(viaReference, batch, grouped, parts, s"ref-$tag")
-      assert(got.size === want.size, tag)
-      want.foreach { case (id, cells) =>
-        cells.indices.foreach { j =>
-          assert(
-            got(id)(j) === cells(j),
-            s"$tag id=$id config=${batch(j)}: ${got(id)(j)} vs ${cells(j)}")
+      val input = data.repartition(parts)
+      val (got, ticks) = run(viaOperator, batch, input, grouped, s"op-$tag")
+      val (want, refTicks) = run(viaReference, batch, input, grouped, s"ref-$tag")
+      assertSame(tag, batch, got, ticks, want, refTicks)
+    }
+  }
+
+  private def assertSame(
+      tag: String,
+      batch: Seq[(Int, Boolean, String, Option[Int])],
+      got: Map[Long, Seq[Option[Long]]],
+      ticks: Long,
+      want: Map[Long, Seq[Option[Long]]],
+      refTicks: Long): Unit = {
+    assert(got.size === want.size, tag)
+    want.foreach { case (id, cells) =>
+      cells.indices.foreach { j =>
+        assert(
+          got(id)(j) === cells(j),
+          s"$tag id=$id config=${batch(j)}: ${got(id)(j)} vs ${cells(j)}")
+      }
+    }
+    // one tick per f call = one per non-null cell, on both sides
+    val calls = want.valuesIterator.map(_.count(_.isDefined)).sum.toLong
+    assert(ticks === calls, s"$tag: operator ticks")
+    assert(refTicks === calls, s"$tag: reference ticks")
+  }
+
+  /** Ids 0..47 with two holes, so that at 7 partitions some are
+    * empty and some hold fewer rows than the window; ~10% null values,
+    * one -0.0 and one NaN.
+    */
+  private val kept: Column =
+    col("id") < 3 || (col("id") >= 9 && col("id") < 11) || col("id") >= 27
+  private def withValues(df: DataFrame): DataFrame =
+    df.select(
+      col("id"),
+      when(pmod(col("id") * 7, lit(10)) === 3, lit(null).cast("double"))
+        .when(col("id") === 28, lit(-0.0))
+        .when(col("id") === 35, lit(Double.NaN))
+        .otherwise(sin(col("id").cast("double")) * 50)
+        .as("v"))
+
+  /** Range-ordered inputs, built two ways, cached before the holes are
+    * cut (a filter below a range exchange would move the range bounds).
+    */
+  private def rangeOrdered(way: String, parts: Int): DataFrame = way match {
+    case "range" => withValues(spark.range(0, 48, 1, parts).toDF())
+    case "repartitionByRange" =>
+      withValues(
+        (47L to 0L by -1L).toDF("id")
+          .repartitionByRange(parts, col("id"))
+          .sortWithinPartitions("id"))
+  }
+
+  /** Each configuration on its own over `input` (so each takes the
+    * range-ordered plan), unioned into one job. Cells by id as in
+    * [[run]], the tick count, and each configuration's ids in the order
+    * the partitions hand them over.
+    */
+  private def runEach(
+      input: DataFrame,
+      batch: Seq[(Int, Boolean, String, Option[Int])],
+      name: String): (Map[Long, Seq[Option[Long]]], Long, Seq[Seq[Long]]) = {
+    val counter = Progress.rowCounter(spark, name)
+    val out = batch.zipWithIndex
+      .map { case ((w, center, closed, mp), i) =>
+        viaOperator(input, Nil, w, "r", mp, center, closed, Some(counter))
+          .select(lit(i).as("c"), col("id"), col("r"))
+      }
+      .reduce(_ union _)
+    val ops = collect(out.queryExecution.executedPlan) { case r: RollingApplyExec => r }
+    assert(ops.size === batch.size, name)
+    ops.foreach { r =>
+      val moved = collect(r.child) { case e: Exchange => e; case s: SortExec => s }
+      assert(moved.isEmpty, s"$name: range-ordered input re-sorted in\n${out.queryExecution.executedPlan}")
+    }
+    val rows = out.collect()
+    val cells = rows.groupBy(_.getLong(1)).map { case (id, rs) =>
+      val byConfig = rs.map(r => r.getInt(0) -> r).toMap
+      id -> batch.indices.map { j =>
+        val r = byConfig(j)
+        if (r.isNullAt(2)) None
+        else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
+      }
+    }
+    val order = batch.indices.map(j => rows.filter(_.getInt(0) == j).map(_.getLong(1)).toSeq)
+    (cells, counter.value, order)
+  }
+
+  for {
+    way <- Seq("range", "repartitionByRange")
+    parts <- Seq(1, 3, 7)
+  } test(s"range-ordered input ($way, $parts partitions): bit-identical, in global order, no exchange") {
+    val cached = rangeOrdered(way, parts).cache()
+    try {
+      val input = cached.where(kept)
+      val sizes = input.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+      if (parts == 7) {
+        assert(sizes.contains(0), s"no empty partition: $sizes")
+        assert(sizes.exists(s => s > 0 && s < 8), s"no partition shorter than the window: $sizes")
+      }
+      val ids = input.select("id").collect().map(_.getLong(0)).toSeq.sorted
+      configs.grouped(32).zipWithIndex.foreach { case (batch, b) =>
+        val tag = s"$way parts=$parts batch=$b"
+        val (got, ticks, order) = runEach(input, batch, s"op-$tag")
+        val (want, refTicks) = run(viaReference, batch, input, grouped = false, s"ref-$tag")
+        assertSame(tag, batch, got, ticks, want, refTicks)
+        order.zip(batch).foreach { case (o, config) =>
+          assert(o === ids, s"$tag config=$config: rows out of global order")
         }
       }
-      // one tick per f call = one per non-null cell, on both sides
-      val calls = want.valuesIterator.map(_.count(_.isDefined)).sum.toLong
-      assert(ticks === calls, s"$tag: operator ticks")
-      assert(refTicks === calls, s"$tag: reference ticks")
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("a nondeterministic child falls back to one sorted partition") {
+    val df = spark.range(0, 40, 1, 3).withColumn("v", rand(7))
+    val out = viaOperator(df, Nil, 3, "r", None, false, "right", None)
+    val ops = collect(out.queryExecution.executedPlan) { case r: RollingApplyExec => r }
+    assert(ops.size === 1)
+    assert(ops.head.requiredChildDistribution === Seq(AllTuples))
+    val funnel = collect(ops.head) {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
     }
+    assert(funnel.size === 1, out.queryExecution.executedPlan.toString)
+    val want = viaReference(df, Nil, 3, "r", None, false, "right", None)
+    assert(out.orderBy("id").collect().toSeq === want.orderBy("id").collect().toSeq)
   }
 
   test("f sees a fresh frame per row and a frame shorter than minPeriods yields null") {
@@ -168,8 +288,9 @@ class RollingApplySpec extends AnyFunSuite {
     // [0, -1]: empty or current-row frames); the operator must agree
     for (center <- Seq(false, true); closed <- closedValues) {
       val batch = Seq((0, center, closed, Option.empty[Int]))
-      val got = scala.util.Try(run(viaOperator, batch, grouped = true, 3, s"op-w0-$closed"))
-      val want = scala.util.Try(run(viaReference, batch, grouped = true, 3, s"ref-w0-$closed"))
+      val input = data.repartition(3)
+      val got = scala.util.Try(run(viaOperator, batch, input, grouped = true, s"op-w0-$closed"))
+      val want = scala.util.Try(run(viaReference, batch, input, grouped = true, s"ref-w0-$closed"))
       assert(got.isSuccess === want.isSuccess, s"center=$center closed=$closed: $got vs $want")
       if (want.isSuccess) assert(got.get === want.get, s"center=$center closed=$closed")
     }
