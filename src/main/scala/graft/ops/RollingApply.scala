@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   Ascending,
   Attribute,
   AttributeReference,
+  AttributeSet,
   Cast,
   Expression,
   ExpressionSet,
@@ -27,7 +28,10 @@ import org.apache.spark.sql.catalyst.plans.physical.{
   Partitioning,
   UnknownPartitioning
 }
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.types.DoubleType
 
@@ -41,7 +45,8 @@ import graft.progress.Progress.RowCounter
   * clustered by the keys, each partition sorted by keys ++ order — so
   * `EnsureRequirements` plans the same hash Exchange + Sort. Without
   * keys it takes the input as it is when the input is already
-  * range-partitioned and sorted by the order (and deterministic): one
+  * range-partitioned and sorted by the order, deterministic, and sure
+  * to hand over the same rows in the same order when read twice: one
   * task per input partition, each reading a few rows ahead into the
   * partitions after its own — the reference's chunk-plus-margin
   * protocol ([[RollingApplyExec]]). Any other ungrouped input is
@@ -184,11 +189,27 @@ object RollingApply {
   *    `i`'s first row, it emits the rows at global positions
   *    `[s_i + L, s_{i+1} + L)`: its first `L` rows only warm the ring,
   *    since the task before it emits them (task 0 emits from 0, the
-  *    last task to the end). Reading ahead costs at most `L + max(0,
-  *    hi)` rows of the next partitions over a pipelined child (scan,
-  *    project, filter, cache) and one more sort of the next partition
-  *    over a Sort. Rows cross partition boundaries, so the output
-  *    partitioning is unknown when there is more than one partition;
+  *    last task to the end; a task whose range is empty reads nothing
+  *    ahead). Reading ahead takes at most `L + max(0, hi)` rows from the
+  *    next partitions, but computes every partition it crosses in full:
+  *    one more sort of the next partition over a Sort, and a whole scan
+  *    of each partition a selective filter leaves empty (a partition is
+  *    computed by at most `L + max(0, hi) + 1` tasks).
+  *
+  *    Tie rule: task `i` and task `i + 1` must see partition `i + 1`'s
+  *    rows in the same order. Otherwise, when a group of rows tied on
+  *    the order straddles row `L`, one of them can be emitted by both
+  *    tasks and another by neither, and frames follow no single order.
+  *    A sort keeps tied rows in arrival order, which a shuffle read or
+  *    a spill merge changes from one read to the next. So this plan is
+  *    taken only when either rows the child's ordering ties on are
+  *    equal in every column but the slot, or the child's tree holds no
+  *    sort and no shuffle read outside its caches
+  *    ([[RollingApplyExec.replays]]). "Equal" is as the sort compares:
+  *    two rows that differ only in the sign of a zero (or the payload
+  *    of a NaN) may trade places across a boundary. Rows cross
+  *    partition boundaries, so the output partitioning is unknown when
+  *    there is more than one partition;
   *  - no keys otherwise: `AllTuples`, one sorted partition.
   */
 final case class RollingApplyExec(
@@ -203,14 +224,27 @@ final case class RollingApplyExec(
   override def output: Seq[Attribute] = child.output
 
   /** Ungrouped, and the child is already in the order the frames
-    * need and gives the same rows when a partition is read twice (each
-    * task re-reads the start of the partitions after its own).
+    * need and gives the same rows in the same order when a partition is
+    * read twice (each task re-reads the start of the partitions after
+    * its own): see the tie rule above.
     */
   private lazy val rangeOrdered: Boolean =
     partitionSpec.isEmpty &&
       child.outputPartitioning.satisfies(OrderedDistribution(orderSpec)) &&
       SortOrder.orderingSatisfies(child.outputOrdering, orderSpec) &&
-      child.find(_.expressions.exists(!_.deterministic)).isEmpty
+      child.find(_.expressions.exists(!_.deterministic)).isEmpty &&
+      (tiesEqual || RollingApplyExec.replays(child))
+
+  /** Rows the child's ordering ties on are equal in every column but
+    * the slot, so any order of them is the same sequence of rows.
+    */
+  private def tiesEqual: Boolean = {
+    val sorted = AttributeSet(
+      child.outputOrdering.flatMap(o => o.child +: o.sameOrderExpressions).collect {
+        case a: Attribute => a
+      })
+    child.output.forall(a => a.exprId == slot.exprId || sorted.contains(a))
+  }
 
   override def requiredChildDistribution: Seq[Distribution] =
     if (partitionSpec.nonEmpty) ClusteredDistribution(partitionSpec) :: Nil
@@ -253,6 +287,21 @@ final case class RollingApplyExec(
 }
 
 object RollingApplyExec {
+
+  /** Whether computing a partition of `p` again gives the same rows in
+    * the same order. Not so through a sort (tied rows keep their
+    * arrival order; the merge after a spill does not keep them in
+    * order) or a shuffle read (blocks arrive in any order). A cached
+    * scan replays its stored blocks when they cannot be dropped and
+    * recomputed (a storage level with disk).
+    */
+  private def replays(p: SparkPlan): Boolean = p match {
+    case _: SortExec | _: ShuffleExchangeLike => false
+    case s: QueryStageExec => replays(s.plan)
+    case r: ReusedExchangeExec => replays(r.child)
+    case s: InMemoryTableScanExec => s.relation.cacheBuilder.storageLevel.useDisk
+    case _ => p.children.forall(replays)
+  }
 
   /** The frame as `f` sees it: the first `length` values of `buf`. */
   private final class View(val buf: Array[Double])
@@ -328,13 +377,14 @@ object RollingApplyExec {
 
     /** Whether the stream has another row worth reading. Leaving `own`
       * fixes `stop`: the first `frame.behind` rows after `own` are this
-      * task's to emit.
+      * task's to emit. A task with nothing left to emit (an own
+      * partition of at most `skip` rows) never touches `ahead`.
       */
     private def more: Boolean =
       src.hasNext || (src eq own) && {
         stop = n + frame.behind
         src = ahead
-        emitted < stop && src.hasNext
+        math.max(emitted, skip) < stop && src.hasNext
       }
 
     private def append(r: InternalRow): Unit = {

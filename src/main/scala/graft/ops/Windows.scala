@@ -26,13 +26,14 @@ import org.apache.spark.sql.functions._
   * order. A declared window plans it as a single-partition window —
   * correct but a scale bottleneck, exactly like pandas' single global
   * sequence. [[rollingCollect]] avoids the funnel when its input is
-  * already range-partitioned and sorted by the order (`spark.range`,
-  * `orderBy`, `repartitionByRange` + `sortWithinPartitions`, or a cache
-  * of one): it then runs the reference's chunk-plus-margin protocol, one
-  * task per range; [[rollingGlobalScalable]] range-partitions any input
-  * first. For algebraic aggregates at 100 TB, express sequence locality
-  * with a partition key (as O7 does) or with [[rollingAgg]] over a
-  * bucketed time key.
+  * already range-partitioned and sorted by the order and reads the same
+  * twice (`spark.range`, a cache of an `orderBy` or `repartitionByRange`
+  * + `sortWithinPartitions` frame, or such a sort over every column): it
+  * then runs the reference's chunk-plus-margin protocol, one task per
+  * range; [[rollingGlobalScalable]] range-partitions any input first.
+  * For algebraic aggregates at 100 TB, express sequence locality with a
+  * partition key (as O7 does) or with [[rollingAgg]] over a bucketed
+  * time key.
   *
   * Arbitrary (non-algebraic) window UDFs: [[rollingCollect]] runs the
   * reference's black-box `rolling.apply(func)` as one operator,
@@ -272,17 +273,20 @@ object Windows {
     * frame (null values are left out of it and of the `minPeriods`
     * count). With `partitionBy` keys the rows first go through the
     * window's hash exchange + sort. Without keys, an input already
-    * range-partitioned and sorted by `orderBy` (and deterministic) is
-    * read as it is, one task per partition, each reading at most
-    * `window` rows of the partitions after its own for its last frames
-    * (pandarallel's chunk-plus-margin protocol); any other ungrouped
-    * input is gathered into one sorted partition. Memory is
-    * O(window) per group; `f` runs outside codegen (same trade the
-    * reference makes for arbitrary Python) and must not keep the `Seq`
-    * it is given. With `minPeriods < window` `f` sees shorter frames
-    * near edges — exactly pandas' rolling.apply contract. Progress ticks
-    * once per `f` call (valid windows only) — the operator's work unit
-    * is the row; the reference's per-group unit
+    * range-partitioned and sorted by `orderBy`, deterministic, and sure
+    * to hand over tied rows in the same order when read twice (a cached
+    * or `spark.range` frame, or a sort over every column; the tie rule
+    * of [[RollingApplyExec]]) is read as it is, one task per partition,
+    * each taking at most `window` rows from the partitions after its
+    * own for its last frames (pandarallel's chunk-plus-margin
+    * protocol); any other ungrouped input is gathered into one sorted
+    * partition. Memory is O(window) per group; `f` runs outside
+    * codegen (same trade the reference makes for arbitrary Python) and
+    * must not keep the `Seq` it is given. With `minPeriods < window`
+    * `f` sees shorter frames near edges — exactly pandas'
+    * rolling.apply contract. Progress ticks once per `f` call (valid
+    * windows only) — the operator's work unit is the row; the
+    * reference's per-group unit
     * (rolling_groupby.py:71-74) corresponds to the hash-exchange groups
     * the task listener already tracks.
     */
@@ -944,9 +948,13 @@ object Windows {
     * ranges after it for its last frames, with no second exchange, no
     * driver collect and no broadcast. The read-ahead sorts each range
     * a second time, in the task before it (in parallel; it stops after
-    * the first rows); a cached sorted input reads them from the cache
-    * instead. Output matches the single-partition window exactly, null
-    * values included (left out of the frame, as in [[rollingCollect]]).
+    * the first rows). Each range is sorted by (order, value), so rows
+    * tied on the order key come out in the same order from either sort
+    * (a tie group crossing the read-ahead margin is then neither
+    * emitted twice nor dropped) and ties are broken by value. With a
+    * unique order key the output matches the single-partition window
+    * exactly, null values included (left out of the frame, as in
+    * [[rollingCollect]]).
     *
     * @param orderCol  total-order key (must be globally sortable)
     */
@@ -963,7 +971,7 @@ object Windows {
     val sorted = df
       .select(Seq(orderCol, valueCol).distinct.map(col): _*)
       .repartitionByRange(n, col(orderCol))
-      .sortWithinPartitions(orderCol)
+      .sortWithinPartitions(orderCol, valueCol)
     rollingCollect(sorted, col(valueCol), Seq(col(orderCol)), Nil, window, outName)(f)
       .select(orderCol, outName)
   }

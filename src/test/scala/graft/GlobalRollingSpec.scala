@@ -78,4 +78,24 @@ class GlobalRollingSpec extends AnyFunSuite {
     assert(got === want)
     assert(want.values.count(_.isDefined) === 15)
   }
+
+  test("ties on the order key: each row once, ties broken by value") {
+    // 15 keys on four rows each, values repeating within a key, so
+    // tie groups cross the range boundaries and the read-ahead margin
+    val df = (0L until 60L)
+      .map(i => (i / 4, if (i % 7 == 3) None else Some(((i * 37) % 5).toDouble)))
+      .toDF("t", "value")
+    val want = Windows
+      .rollingCollect(df, col("value"), Seq(col("t"), col("value")), Nil, 3, "v")(_.sum)
+      .select("t", "v")
+      .as[(Long, Option[Double])]
+      .collect()
+      .toSeq
+    val scalable = Windows.rollingGlobalScalable(df, "t", "value", 3, "v", numPartitions = 6)(_.sum)
+    val plan = scalable.queryExecution.executedPlan.toString
+    assert(!plan.contains("SinglePartition"), plan)
+    val got = scalable.as[(Long, Option[Double])].collect().toSeq
+    assert(got.size === 60)
+    assert(got.sorted === want.sorted)
+  }
 }

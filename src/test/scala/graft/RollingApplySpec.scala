@@ -1,11 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.physical.{
+  AllTuples,
+  OrderedDistribution,
+  RangePartitioning,
+  SinglePartition
+}
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
-import org.apache.spark.sql.functions.{col, lit, pmod, rand, sin, when}
+import org.apache.spark.sql.functions.{col, lit, pmod, rand, sin, udf, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -246,6 +251,110 @@ class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(funnel.size === 1, out.queryExecution.executedPlan.toString)
     val want = viaReference(df, Nil, 3, "r", None, false, "right", None)
     assert(out.orderBy("id").collect().toSeq === want.orderBy("id").collect().toSeq)
+  }
+
+  /** Ids 0..19, each on 0 to 4 rows; values from a handful (null and
+    * NaN included), so some rows repeat in full and most tie groups
+    * mix values.
+    */
+  private lazy val tied: DataFrame = {
+    val rng = new Random(7L)
+    val vals = Seq(None, Some(1.5), Some(-2.0), Some(4.25), Some(Double.NaN))
+    (0L until 20L).flatMap { id =>
+      Seq.fill(rng.nextInt(5))((id, vals(rng.nextInt(vals.size))))
+    }.toDF("id", "v")
+  }
+
+  private type Cell = (Long, Option[Long], Option[Long]) // id, v and result bits
+  private def cell(id: Long, v: Any, r: Any): Cell = {
+    def bits(x: Any) = Option(x).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
+    (id, bits(v), bits(r))
+  }
+
+  for (parts <- Seq(3, 7)) test(
+    s"duplicate keys under a sort over every column ($parts ranges): each row once, same frames") {
+    // a sort over a shuffle: the range plan rests on tied rows being equal
+    val input = tied.repartitionByRange(parts, col("id")).sortWithinPartitions("id", "v")
+    val byKey: Ordering[Cell] = Ordering.by[Cell, (Long, Option[Double])](
+      c => (c._1, c._2.map(java.lang.Double.longBitsToDouble)))(
+      Ordering.Tuple2(Ordering.Long, Ordering.Option(Ordering.Double.TotalOrdering)))
+    configs.grouped(32).zipWithIndex.foreach { case (batch, b) =>
+      val tag = s"tied parts=$parts batch=$b"
+      val counter = Progress.rowCounter(spark, s"op-$tag")
+      val refCounter = Progress.rowCounter(spark, s"ref-$tag")
+      def each(rolling: (DataFrame, (Int, Boolean, String, Option[Int])) => DataFrame) =
+        batch.zipWithIndex
+          .map { case (config, i) => rolling(input, config).select(lit(i).as("c"), col("id"), col("v"), col("r")) }
+          .reduce(_ union _)
+      val out = each { case (df, (w, center, closed, mp)) =>
+        viaOperator(df, Nil, w, "r", mp, center, closed, Some(counter))
+      }
+      val ref = each { case (df, (w, center, closed, mp)) =>
+        RollingReference.rollingCollect(
+          df, col("v"), Seq(col("id"), col("v")), Nil, w, "r", mp, center, closed, Some(refCounter))(wmean)
+      }
+      val ops = collect(out.queryExecution.executedPlan) { case r: RollingApplyExec => r }
+      assert(ops.size === batch.size, tag)
+      ops.foreach { r =>
+        assert(r.requiredChildDistribution.head.isInstanceOf[OrderedDistribution], tag)
+        val exchanges = collect(r.child) { case e: ShuffleExchangeExec => e.outputPartitioning }
+        assert(exchanges.forall(_.isInstanceOf[RangePartitioning]), s"$tag:\n${out.queryExecution.executedPlan}")
+      }
+      def cells(df: DataFrame) = df.collect().toSeq.groupBy(_.getInt(0)).map { case (c, rs) =>
+        c -> rs.map(r => cell(r.getLong(1), r.get(2), r.get(3)))
+      }
+      val (got, want) = (cells(out), cells(ref))
+      batch.indices.foreach { i =>
+        val config = batch(i)
+        assert(got(i).sorted === want(i).sorted, s"$tag config=$config")
+        assert(got(i) === got(i).sorted(byKey), s"$tag config=$config: rows out of global order")
+      }
+      val calls = want.valuesIterator.flatten.count(_._3.isDefined).toLong
+      assert(counter.value === calls, s"$tag: operator ticks")
+      assert(refCounter.value === calls, s"$tag: reference ticks")
+    }
+  }
+
+  test("duplicate keys under a sort that leaves a column out: one sorted partition, unless cached") {
+    val sorted = tied.withColumn("u", col("id") * 2).repartitionByRange(3, col("id")).sortWithinPartitions("id")
+    def check(df: DataFrame, ranged: Boolean): Unit = {
+      val out = viaOperator(df, Nil, 3, "r", None, false, "right", None)
+      val plan = out.queryExecution.executedPlan
+      val ops = collect(plan) { case r: RollingApplyExec => r }
+      assert(ops.size === 1)
+      assert(ops.head.requiredChildDistribution.head.isInstanceOf[OrderedDistribution] === ranged, plan)
+      val funnel = collect(ops.head) {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+      }
+      assert(funnel.size === (if (ranged) 0 else 1), plan)
+      // each input row exactly once, in global order
+      val rows = out.select("id", "v", "u").collect().toSeq
+      val key = (r: org.apache.spark.sql.Row) => (r.getLong(0), Option(r.get(1)).map(_.toString), r.getLong(2))
+      assert(rows.map(key).sorted === df.select("id", "v", "u").collect().toSeq.map(key).sorted)
+      assert(rows.map(_.getLong(0)) === rows.map(_.getLong(0)).sorted)
+    }
+    check(sorted, ranged = false)
+    val cached = sorted.cache()
+    // a cache reports its plan's partitioning once it is materialized
+    try { cached.count(); check(cached, ranged = true) }
+    finally cached.unpersist(blocking = true)
+  }
+
+  test("a task whose range is empty reads nothing ahead") {
+    val computed = spark.sparkContext.longAccumulator("rows computed")
+    val seen = udf { (x: Long) => computed.add(1); x }
+    // only range 0 keeps rows; ranges 1..6 are computed and left empty
+    val df = spark.range(0, 700, 1, 7).where(seen(col("id")) < 50).withColumn("v", col("id") * 0.5)
+    val out = Windows.rollingCollect(df, col("v"), Seq(col("id")), Nil, 3, "r")(_.sum)
+    val ops = collect(out.queryExecution.executedPlan) { case r: RollingApplyExec => r }
+    assert(ops.size === 1 && collect(ops.head) { case e: Exchange => e }.isEmpty)
+    val got = out.select("id", "r").as[(Long, Option[Double])].collect().toSeq
+    assert(got.map(_._1) === (0L until 50L))
+    assert(got.last._2 === Some(0.5 * (47 + 48 + 49)))
+    // every range by its own task, and ranges 1..6 once more by task 0,
+    // which looks for the two rows after its own; the tasks of the
+    // empty ranges read nothing after theirs
+    assert(computed.value === 700L + 600L)
   }
 
   test("f sees a fresh frame per row and a frame shorter than minPeriods yields null") {
