@@ -129,8 +129,9 @@ object SparkEntry {
   // ---------------------------------------------------------------- Q10
   /** O7 grouped rolling apply (reference tests/test_pandarallel.py:308-325):
     * Q9's polynomial partitioned by user_id — scales horizontally (hash
-    * exchange on user_id, then the same streaming
-    * [[graft.ops.RollingApply]] operator evaluates each group's frames).
+    * exchange on user_id and a sort on event_id alone, then the same
+    * streaming [[graft.ops.RollingApply]] operator evaluates each
+    * user's frames from a ring per user).
     */
   private def q10(s: SparkSession, d: String): DataFrame =
     Windows
@@ -148,7 +149,9 @@ object SparkEntry {
   // ---------------------------------------------------------------- Q11
   /** O8 grouped expanding apply (reference tests/test_pandarallel.py:131-141,
     * simplified weighted form): cumulative sum per user — algebraic
-    * rewrite (running aggregate), O(1) state per row at any scale.
+    * rewrite (running aggregate), run by [[graft.ops.RunningWindowExec]]:
+    * hash exchange on user_id, a sort on event_id alone, one sum buffer
+    * per user (memory: users in a partition × one buffer).
     */
   private def q11(s: SparkSession, d: String): DataFrame =
     Windows

@@ -140,36 +140,50 @@ object Pandarallel {
       GroupApply.filterGroups(df, keys)(agg, pred)
 
     /** O5, black-box group function, many rows out per group
-      * (dataframe_groupby.py:24-40 generalized).
+      * (dataframe_groupby.py:24-40 generalized). The rows are grouped
+      * by the named columns — the exchange and sort read them as they
+      * are — and `keyFn` names each group: `K` is `keyFn` of the
+      * group's first row.
+      *
+      * `keyFn` contract (all four black-box forms): every row of a
+      * group, including rows `f` leaves unread, must give the same `K`,
+      * and two groups must not give the same `K` — `keyFn` names the
+      * groups the columns make, no finer and no coarser. A `keyFn` that
+      * disagrees fails the call (a coarser one whenever two of the
+      * groups it merges meet in one task).
       */
     def applyGroups[K: Encoder, T: Encoder](keyFn: Row => K)(
         f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[T] =
-      GroupApply.flatMapGroups(df)(keyFn)(f)
+      GroupApply.flatMapGroups(df, columns = Some(keys))(keyFn)(f)
 
     /** O5, "new object" result shape: pandas puts group keys in the
       * result index (dataframe_groupby.py:49-81) — here they become the
-      * leading column of every output row.
+      * leading column of every output row. Grouped by the named columns,
+      * under [[applyGroups]]' `keyFn` contract.
       */
     def applyKeyed[K: Encoder, T: Encoder](keyFn: Row => K)(
         f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[(K, T)] =
-      GroupApply.applyGroupsKeyed(df)(keyFn)(f)
+      GroupApply.applyGroupsKeyed(df, Some(keys))(keyFn)(f)
 
     /** O5, "mutation" result shape: pandas keeps the original row index
       * (utils.py:61-85 sniff) — here outputs return in source-row order.
+      * Grouped by the named columns, under [[applyGroups]]' `keyFn`
+      * contract.
       */
     def transform[K: Encoder, T: Encoder](keyFn: Row => K)(
         f: (K, Seq[Row]) => Seq[T]): Dataset[T] =
-      GroupApply.transformGroups(df)(keyFn)(f)
+      GroupApply.transformGroups(df, Some(keys))(keyFn)(f)
 
     /** [[transform]] minus the global order restoration (one shuffle
       * instead of two — [[GroupApply.transformGroupsLocal]]): same
       * values, per-group source order, group order arbitrary. Use when
       * the result is consumed grouped (re-aggregated, joined, written
-      * partitioned) rather than read top-to-bottom.
+      * partitioned) rather than read top-to-bottom. Grouped by the
+      * named columns, under [[applyGroups]]' `keyFn` contract.
       */
     def transformLocal[K: Encoder, T: Encoder](keyFn: Row => K)(
         f: (K, Seq[Row]) => Seq[T]): Dataset[T] =
-      GroupApply.transformGroupsLocal(df)(keyFn)(f)
+      GroupApply.transformGroupsLocal(df, Some(keys))(keyFn)(f)
 
     /** O7 entry (core.py:543-545) with rolling-attribute replay
       * (rolling_groupby.py:35-40).

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.streaming.SnapshotCommit
 
@@ -293,7 +293,7 @@ object AtomicAppend {
     * plan literal per leg, not a computed column.
     */
   def readWithSeg(spark: SparkSession, dataRoot: String): DataFrame = {
-    import org.apache.spark.sql.functions.{input_file_name, length, lit, regexp_extract, when}
+    import org.apache.spark.sql.functions.{input_file_name, lit}
     val (base, segs) = viewLegsInfo(spark, dataRoot)
     val baseDf = spark.read.parquet(base)
     val b = baseDf.withColumn("__seg", lit(0L))
@@ -301,35 +301,21 @@ object AtomicAppend {
     else {
       // same leg batching as [[read]]. For the flat multi-path scan
       // the per-segment label is derived from the file path instead of
-      // a per-leg plan literal: `_seg-([0-9]+)` matches exactly the
-      // plain-segment directory name every file of that scan lives
-      // under (the guard only protects a hypothetical non-matching
-      // path from feeding '' to the cast, which under the default ANSI
-      // mode would throw). The flat label is no longer a
-      // constant-foldable literal, so a `__seg` filter can't prune
-      // individual flat segments at plan time — no current consumer
-      // filters the scan on `__seg` (both drift metrics aggregate over
-      // every segment); a future leg-pruning consumer should read legs
-      // directly. Partitioned legs keep their literal labels.
+      // a per-leg plan literal ([[segOfFile]]). The flat label is no
+      // longer a constant-foldable literal, so a `__seg` filter can't
+      // prune individual flat segments at plan time — no current
+      // consumer filters the scan on `__seg` (both drift metrics
+      // aggregate over every segment); a future leg-pruning consumer
+      // should read legs directly. Partitioned legs keep their literal
+      // labels.
       val (parted, flat) = segs.partition(_._2)
-      // anchored to the file's IMMEDIATE parent directory: flat legs
-      // hold their part files directly under `_seg-<n>`, so this can
-      // never match a like-named ANCESTOR of the dataRoot (round-17
-      // review fix — the unanchored first-match form would have
-      // mislabeled every segment of an index nested under some other
-      // `_seg-<k>` directory)
-      val segStr =
-        regexp_extract(input_file_name(), "/_seg-([0-9]+)/[^/]+$", 1)
       val flatDf =
         if (flat.isEmpty) Nil
         else
           Seq(
             spark.read
               .parquet(flat.map(_._1.toString): _*)
-              .withColumn(
-                "__seg",
-                when(length(segStr) > 0, segStr.cast("long"))
-                  .otherwise(lit(0L))))
+              .withColumn("__seg", segOfFile(input_file_name(), dataRoot)))
       val partedDfs = concurrently(parted) { case (p, _) =>
         spark.read
           .parquet(p.toString)
@@ -337,6 +323,23 @@ object AtomicAppend {
       }
       (flatDf ++ partedDfs).foldLeft(b)(_ unionByName _)
     }
+  }
+
+  /** The segment id of a flat-leg data file: `n` of the `_seg-<n>`
+    * directory that holds it. Anchored to the file's IMMEDIATE parent
+    * directory: flat legs hold their part files directly under
+    * `_seg-<n>`, so this can never match a like-named ANCESTOR of the
+    * dataRoot (round-17 review fix — the unanchored first-match form
+    * would have mislabeled every segment of an index nested under some
+    * other `_seg-<k>` directory). A file with no such parent has no
+    * segment, so the read fails naming the file rather than calling it
+    * the base (segment 0).
+    */
+  private[graft] def segOfFile(file: Column, dataRoot: String): Column = {
+    import org.apache.spark.sql.functions.{concat, length, lit, raise_error, regexp_extract, when}
+    val segStr = regexp_extract(file, "/_seg-([0-9]+)/[^/]+$", 1)
+    when(length(segStr) > 0, segStr.cast("long"))
+      .otherwise(raise_error(concat(lit(s"file outside a _seg-<n> directory of $dataRoot: "), file)))
   }
 
   /** Number of scan legs the committed view currently unions — the

@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.functions.col
 
 /** O5 — `DataFrameGroupBy.parallel_apply(func)`.
   * Reference: pandarallel/core.py:533-535, data_types/dataframe_groupby.py.
@@ -28,12 +30,18 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
   * Skew: a giant group is one slow task in both engines (SURVEY §7.4);
   * prefer [[agg]] (AQE-skew-aware, partials bound memory) wherever the
   * function is algebraic.
+  *
+  * The black-box forms group by `keyFn` (`groupByKey`, which
+  * deserializes every row before the exchange to append the key), or,
+  * given `columns`, by those named columns ([[byColumns]]): the
+  * exchange and sort read the columns as they are, and `keyFn` only
+  * names each group.
   */
 object GroupApply {
 
   /** Expression aggregates per group — partial+final hash aggregation. */
   def agg(df: DataFrame, keys: Seq[String])(aggs: Column*): DataFrame =
-    df.groupBy(keys.map(org.apache.spark.sql.functions.col): _*)
+    df.groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
 
   /** pandas `groupby(keys).filter(pred)` — keep the MEMBER ROWS of every
@@ -48,7 +56,6 @@ object GroupApply {
   def filterGroups(
       df: DataFrame,
       keys: Seq[String])(agg: Column, pred: Column => Column): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val keep = df
       .groupBy(keys.map(col): _*)
       .agg(agg.as("__agg"))
@@ -86,12 +93,13 @@ object GroupApply {
     * sniff). Spark has no index, so the keys become leading columns —
     * every output row carries its group key automatically.
     */
-  def applyGroupsKeyed[K: Encoder, T: Encoder](df: DataFrame)(keyFn: Row => K)(
+  def applyGroupsKeyed[K: Encoder, T: Encoder](
+      df: DataFrame,
+      columns: Option[Seq[String]] = None)(keyFn: Row => K)(
       f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[(K, T)] = {
     implicit val enc: Encoder[(K, T)] =
       Encoders.tuple(implicitly[Encoder[K]], implicitly[Encoder[T]])
-    df.groupByKey(keyFn)(implicitly[Encoder[K]])
-      .flatMapGroups((k: K, it: Iterator[Row]) => f(k, it).iterator.map(k -> _))
+    groups(df, columns)(keyFn)((k: K, it: Iterator[Row]) => f(k, it).iterator.map(k -> _))
   }
 
   /** pandas result-index shaping, "mutation" branch: when the UDF
@@ -113,12 +121,14 @@ object GroupApply {
     * global order is wasted work: use [[transformGroupsLocal]], which
     * stops after the per-group ordering and skips the exchange.
     */
-  def transformGroups[K: Encoder, T: Encoder](df: DataFrame)(keyFn: Row => K)(
+  def transformGroups[K: Encoder, T: Encoder](
+      df: DataFrame,
+      columns: Option[Seq[String]] = None)(keyFn: Row => K)(
       f: (K, Seq[Row]) => Seq[T]): Dataset[T] = {
     implicit val pairEnc: Encoder[(Long, T)] =
       Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[T]])
-    transformGroupsIndexed(df)(keyFn)(f)
-      .orderBy(org.apache.spark.sql.functions.col("_1"))
+    transformGroupsIndexed(df, columns)(keyFn)(f)
+      .orderBy(col("_1"))
       .map(_._2)(implicitly[Encoder[T]])
   }
 
@@ -128,47 +138,114 @@ object GroupApply {
     * contiguous and in source order, group order arbitrary) — one
     * shuffle total. Same-values-different-order vs [[transformGroups]].
     */
-  def transformGroupsLocal[K: Encoder, T: Encoder](df: DataFrame)(
-      keyFn: Row => K)(
+  def transformGroupsLocal[K: Encoder, T: Encoder](
+      df: DataFrame,
+      columns: Option[Seq[String]] = None)(keyFn: Row => K)(
       f: (K, Seq[Row]) => Seq[T]): Dataset[T] = {
     implicit val pairEnc: Encoder[(Long, T)] =
       Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[T]])
-    transformGroupsIndexed(df)(keyFn)(f).map(_._2)(implicitly[Encoder[T]])
+    transformGroupsIndexed(df, columns)(keyFn)(f).map(_._2)(implicitly[Encoder[T]])
   }
 
   /** Shared mutation-branch core: (source index, output) pairs, grouped,
     * per-group in source order.
     */
-  private def transformGroupsIndexed[K: Encoder, T: Encoder](df: DataFrame)(
-      keyFn: Row => K)(
+  private def transformGroupsIndexed[K: Encoder, T: Encoder](
+      df: DataFrame,
+      columns: Option[Seq[String]])(keyFn: Row => K)(
       f: (K, Seq[Row]) => Seq[T])(implicit
       pairEnc: Encoder[(Long, T)]): Dataset[(Long, T)] =
-    graft.Index
-      .attach(df)
-      .groupByKey(keyFn)(implicitly[Encoder[K]])
-      .flatMapGroups { (k: K, it: Iterator[Row]) =>
-        val rows = it.toSeq.sortBy(_.getAs[Long](graft.Index.col))
-        val out = f(k, rows)
-        require(
-          out.length == rows.length,
-          s"transformGroups UDF returned ${out.length} rows for a " +
-            s"${rows.length}-row group — the mutation branch is same-length")
-        rows.map(_.getAs[Long](graft.Index.col)).iterator.zip(out.iterator)
-      }
+    groups(graft.Index.attach(df), columns)(keyFn) { (k: K, it: Iterator[Row]) =>
+      val rows = it.toSeq.sortBy(_.getAs[Long](graft.Index.col))
+      val out = f(k, rows)
+      require(
+        out.length == rows.length,
+        s"transformGroups UDF returned ${out.length} rows for a " +
+          s"${rows.length}-row group — the mutation branch is same-length")
+      rows.map(_.getAs[Long](graft.Index.col)).iterator.zip(out.iterator)
+    }
 
   /** Black-box group UDF, many output rows per group (UDTF-like).
     * Counter ticks once per group, as above.
     */
   def flatMapGroups[K: Encoder, T: Encoder](
       df: DataFrame,
-      counter: Option[graft.progress.Progress.RowCounter] = None)(
+      counter: Option[graft.progress.Progress.RowCounter] = None,
+      columns: Option[Seq[String]] = None)(
       keyFn: Row => K)(
       f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[T] = {
     val g = counter match {
       case None    => f
       case Some(c) => (k: K, it: Iterator[Row]) => { c.tick(); f(k, it) }
     }
-    df.groupByKey(keyFn)(implicitly[Encoder[K]]).flatMapGroups(g)
+    groups(df, columns)(keyFn)(g)
+  }
+
+  /** `df`'s groups by `keyFn`, or by the named `columns` when given. */
+  private def groups[K: Encoder, T: Encoder](df: DataFrame, columns: Option[Seq[String]])(
+      keyFn: Row => K)(
+      f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[T] =
+    columns match {
+      case None       => df.groupByKey(keyFn)(implicitly[Encoder[K]]).flatMapGroups(f)
+      case Some(keys) => byColumns(df, keys)(keyFn)(f)
+    }
+
+  /** `df` grouped by the named `keys` columns: the hash exchange and the
+    * sort read the columns as they are (no per-row key column appended
+    * before the exchange), and each group reaches `f` with `K` =
+    * `keyFn` of its first row.
+    *
+    * `keyFn` contract: it must name the same groups as the columns.
+    * Every row of a group, including the rows `f` leaves unread (they
+    * are read after `f`'s output), must give the group's `K` — a finer
+    * `keyFn` fails there; and no two groups met by one task may give
+    * the same `K` — a coarser `keyFn` fails there (two groups merged by
+    * it always meet in one task when the groups outnumber the tasks).
+    * Keys compare with `==` or `equals` (NaN equals NaN). A failure
+    * fails the task, and so the job. Memory: one entry per group a task
+    * meets.
+    */
+  private def byColumns[K, T: Encoder](df: DataFrame, keys: Seq[String])(keyFn: Row => K)(
+      f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[T] = {
+    val cols = keys.map(col)
+    val named = new GroupNames[K](keys)
+    df.groupBy(cols: _*)
+      .as(Encoders.row(df.select(cols: _*).schema), Encoders.row(df.schema))
+      .flatMapGroups { (g: Row, it: Iterator[Row]) =>
+        val first = it.next()
+        val k = named.claim(keyFn(first), g)
+        val rows = Iterator.single(first) ++ it.map { r => named.check(keyFn(r), k, g); r }
+        f(k, rows).iterator ++ { rows.foreach(_ => ()); Iterator.empty }
+      }
+  }
+
+  /** The `K` each group of a task was named by ([[byColumns]]). The
+    * instance ships with each task; the map starts over per task.
+    */
+  private final class GroupNames[K](keys: Seq[String]) extends Serializable {
+    @transient private var task: TaskContext = null
+    @transient private var named: java.util.HashMap[Any, Row] = null
+
+    private def same(a: Any, b: Any): Boolean =
+      a == b || java.util.Objects.equals(a.asInstanceOf[AnyRef], b.asInstanceOf[AnyRef])
+
+    private def fail(msg: String): Nothing =
+      throw new IllegalArgumentException(
+        s"keyFn does not match the group columns ${keys.mkString("(", ", ", ")")}: $msg")
+
+    /** `k`, after checking that no other group of this task has it. */
+    def claim(k: K, group: Row): K = {
+      val t = TaskContext.get()
+      if (named == null || (task ne t)) { task = t; named = new java.util.HashMap[Any, Row]() }
+      val other = named.putIfAbsent(k, group)
+      if (other != null)
+        fail(s"groups $other and $group both give key $k (keyFn is coarser than the columns)")
+      k
+    }
+
+    def check(k: K, want: K, group: Row): Unit =
+      if (!same(k, want))
+        fail(s"rows of group $group give keys $want and $k (keyFn is finer than the columns)")
   }
 
   /** Group-wise MERGE of two tables — the training-pipeline shape "align

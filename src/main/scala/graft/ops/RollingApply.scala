@@ -37,25 +37,34 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.progress.Progress.RowCounter
 
+import scala.jdk.CollectionConverters._
+
 /** Black-box fixed-row rolling apply (O6 / O7) as one physical operator:
   * pandas `rolling(w, center, closed, min_periods).apply(f)`, where
   * pandas hands `f` a view of each window and copies nothing per row.
   *
-  * With keys the operator asks for what `WindowExec` asks for — rows
-  * clustered by the keys, each partition sorted by keys ++ order — so
-  * `EnsureRequirements` plans the same hash Exchange + Sort. Without
-  * keys it takes the input as it is when the input is already
-  * range-partitioned and sorted by the order, deterministic, and sure
-  * to hand over the same rows in the same order when read twice: one
-  * task per input partition, each reading a few rows ahead into the
-  * partitions after its own — the reference's chunk-plus-margin
-  * protocol ([[RollingApplyExec]]). Any other ungrouped input is
-  * gathered into one sorted partition (`Exchange SinglePartition` +
-  * Sort). Each task then streams its rows ONCE: per group, a ring of
-  * primitive doubles (with null flags) covering the frame, one reusable
+  * With keys the operator asks for rows clustered by the keys — the
+  * hash exchange deals whole groups to tasks, as pandarallel deals
+  * groups to workers — and each partition sorted by the order alone:
+  * it keeps one state per key, so the keys may interleave (a child
+  * already sorted by keys ++ order is taken as it is). Without keys it
+  * takes the input as it is when the input is already range-partitioned
+  * and sorted by the order, deterministic, and sure to hand over the
+  * same rows in the same order when read twice: one task per input
+  * partition, each reading a few rows ahead into the partitions after
+  * its own — the reference's chunk-plus-margin protocol
+  * ([[RollingApplyExec]]). Any other ungrouped input is gathered into
+  * one sorted partition (`Exchange SinglePartition` + Sort). Each task
+  * then streams its rows ONCE: per key, a ring of primitive doubles
+  * (with null flags) covering the frame; one reusable
   * `IndexedSeq[Double]` view handed to `f`, and one `UnsafeProjection`
   * writing the input row with the result in its slot column. No
   * per-row frame array, no boxed `Seq`, no frame re-aggregation.
+  *
+  * Memory: (distinct keys in a partition) × (the ring of
+  * `hi - lo + 1` values, plus up to `hi` rows read ahead of the row to
+  * emit). Like pandarallel's per-worker chunk, this state is not
+  * spillable.
   *
   * Output equals the `collect_list` + UDF form bit for bit (the test
   * suite keeps that form as its oracle): null values are left out of
@@ -149,11 +158,7 @@ object RollingApply {
       frame: Frame,
       outName: String): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val extra = spark.experimental
-    extra.synchronized {
-      if (!extra.extraStrategies.contains(Strategy))
-        extra.extraStrategies = extra.extraStrategies :+ Strategy
-    }
+    KeyedPlan.register(spark, Strategy)
     val order = orderBy.map(spark.expression).map {
       case s: SortOrder => s
       case e => SortOrder(e, Ascending)
@@ -178,8 +183,13 @@ object RollingApply {
 }
 
 /** Physical side of [[RollingApply]], in one of three plans:
-  *  - keys: `ClusteredDistribution(keys)`, each partition sorted by
-  *    keys ++ order — the hash exchange deals whole groups to tasks;
+  *  - keys: `ClusteredDistribution(keys)`, each partition sorted by the
+  *    order alone ([[KeyedPlan.ordering]]: keys ++ order when the child
+  *    is already sorted so). One state per key, found by a hash lookup
+  *    on the key. With `hi > 0` a key's row leaves once the row `hi`
+  *    after it has been read, and each key's last rows at the end of the
+  *    partition, so rows leave out of arrival order and the operator
+  *    claims no output ordering;
   *  - no keys, and the child already range-partitioned and sorted by
   *    the order, with no nondeterministic expression in its tree: the
   *    child as it is (no exchange, no sort). Task `i` streams its own
@@ -211,6 +221,8 @@ object RollingApply {
   *    partition boundaries, so the output partitioning is unknown when
   *    there is more than one partition;
   *  - no keys otherwise: `AllTuples`, one sorted partition.
+  *
+  * Ungrouped, the same kernel runs with a single state.
   */
 final case class RollingApplyExec(
     value: Expression,
@@ -252,10 +264,12 @@ final case class RollingApplyExec(
     else AllTuples :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    Seq(partitionSpec.map(SortOrder(_, Ascending)) ++ orderSpec)
+    Seq(KeyedPlan.ordering(partitionSpec, orderSpec, child))
 
-  // rows leave each task in the order they arrive
-  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  // rows leave each task in the order they arrive, unless keyed rows
+  // wait for rows after them
+  override def outputOrdering: Seq[SortOrder] =
+    if (partitionSpec.nonEmpty && frame.hi > 0) Nil else child.outputOrdering
   override def outputPartitioning: Partitioning = child.outputPartitioning match {
     case p if rangeOrdered && p.numPartitions > 1 => UnknownPartitioning(p.numPartitions)
     case p => p
@@ -339,13 +353,15 @@ object RollingApplyExec {
     override def getParents(i: Int): Seq[Int] = i until rdd.partitions.length
   }
 
-  /** One pass over a stream sorted by keys ++ order: `own` (a
-    * partition), then `ahead` (the partitions after it; empty with
-    * keys). Row `i` of a group leaves once row `i + hi` has been read
-    * (or the group has ended); rows read ahead of it wait, copied, in
-    * `pending`. The stream's first `skip` rows only fill the ring, and
-    * emission stops `frame.behind` rows past the end of `own`, so
-    * `ahead` is read only as far as the last emitted frame needs.
+  /** One pass over a stream sorted by the order: `own` (a partition),
+    * then `ahead` (the partitions after it; empty with keys), with one
+    * [[Key]] state per key (a single one when ungrouped). Row `i` of a
+    * key leaves once row `i + hi` of that key has been read, or, for
+    * the last rows of each key, once the stream is done; rows read ahead
+    * of it wait, copied, in `pending`. Ungrouped, the stream's first
+    * `skip` rows only fill the ring, and emission stops `frame.behind`
+    * rows past the end of `own`, so `ahead` is read only as far as the
+    * last emitted frame needs.
     */
   private final class Rows(
       own: Iterator[InternalRow],
@@ -358,79 +374,97 @@ object RollingApplyExec {
       extends Iterator[InternalRow] {
     private val lo = frame.lo
     private val hi = frame.hi
-    // ring of values at group positions [min(i, i + lo), max(i, i + hi)]
+    // ring of values at key positions [min(i, i + lo), max(i, i + hi)]
     private val cap = math.max(hi, 0) - math.min(lo, 0) + 1
-    private val vals = new Array[Double](cap)
-    private val valid = new Array[Boolean](cap)
     private val view = new View(new Array[Double](cap))
-    private val pending = new java.util.ArrayDeque[InternalRow]()
-    private var current: InternalRow = null // the row to emit when hi <= 0
     private val result = new SpecificInternalRow(Seq(DoubleType))
     private val joined = new JoinedRow
-    private var key: UnsafeRow = null
-    private var carry: InternalRow = null // first row of the next group
-    private var n = 0 // rows of the current group read
-    private var emitted = 0 // rows of the current group emitted or skipped
-    private var ended = true // no more rows in the current group
-    private var src = own
-    private var stop = Int.MaxValue // no row from here on is emitted
 
-    /** Whether the stream has another row worth reading. Leaving `own`
-      * fixes `stop`: the first `frame.behind` rows after `own` are this
-      * task's to emit. A task with nothing left to emit (an own
-      * partition of at most `skip` rows) never touches `ahead`.
+    /** One key's rows: the ring, the rows read (`n`), emitted or skipped
+      * (`emitted`), and with `hi > 0` those read but not yet emitted.
+      */
+    private final class Key {
+      val vals = new Array[Double](cap)
+      val valid = new Array[Boolean](cap)
+      val pending = if (hi > 0) new java.util.ArrayDeque[InternalRow]() else null
+      var n = 0
+      var emitted = 0
+    }
+
+    private val keys = if (keyOf == null) null else new java.util.HashMap[UnsafeRow, Key]()
+    private val only = if (keyOf == null) new Key else null
+    private var ready: Key = null // the key that took the last row, then each key in turn
+    private var current: InternalRow = null // the row to emit when hi <= 0
+    private var rest: java.util.Iterator[Key] = null // keys left once the stream is done
+    private var src = own
+    private var stop = Int.MaxValue // ungrouped: no row from here on is emitted
+
+    /** Whether the stream has another row. Leaving `own` fixes `stop`:
+      * the first `frame.behind` rows after `own` are this task's to
+      * emit. A task with nothing left to emit (an own partition of at
+      * most `skip` rows) never touches `ahead`.
       */
     private def more: Boolean =
       src.hasNext || (src eq own) && {
-        stop = n + frame.behind
+        if (only != null) stop = only.n + frame.behind
         src = ahead
-        math.max(emitted, skip) < stop && src.hasNext
+        (only == null || math.max(only.emitted, skip) < stop) && src.hasNext
       }
 
-    private def append(r: InternalRow): Unit = {
+    private def keyFor(r: InternalRow): Key =
+      if (keys == null) only
+      else {
+        val k = keyOf(r)
+        var s = keys.get(k)
+        if (s == null) { s = new Key; keys.put(k.copy(), s) }
+        s
+      }
+
+    private def append(k: Key, r: InternalRow): Unit = {
       val x = valueOf(r)
-      val s = n % cap
-      valid(s) = !x.isNullAt(0)
-      if (valid(s)) vals(s) = x.getDouble(0)
-      if (hi > 0) pending.addLast(r.copy()) else current = r
-      n += 1
+      val s = k.n % cap
+      k.valid(s) = !x.isNullAt(0)
+      if (k.valid(s)) k.vals(s) = x.getDouble(0)
+      if (hi > 0) k.pending.addLast(r.copy()) else current = r
+      k.n += 1
     }
 
+    /** Whether `k`'s next row can leave: its frame is complete. */
+    private def due(k: Key): Boolean =
+      k.emitted < k.n && k.emitted < stop && (rest != null || k.emitted + hi < k.n)
+
     override def hasNext: Boolean = {
-      while (math.max(emitted, skip) < stop) {
-        if (emitted < n && (ended || emitted + hi < n)) {
-          if (emitted >= skip) return true
-          if (hi > 0) pending.removeFirst()
-          emitted += 1
-        } else if (ended) {
-          if (carry == null) {
-            if (!more) return false
-            carry = src.next()
+      while (only == null || math.max(only.emitted, skip) < stop) {
+        if (ready != null && due(ready)) {
+          if (ready.emitted >= skip) return true
+          if (hi > 0) ready.pending.removeFirst()
+          ready.emitted += 1
+        } else if (rest == null) {
+          if (more) {
+            val r = src.next()
+            ready = keyFor(r)
+            append(ready, r)
+          } else {
+            rest = if (keys == null) Iterator.single(only).asJava else keys.values.iterator
+            ready = null
           }
-          n = 0; emitted = 0; ended = false
-          if (keyOf != null) key = keyOf(carry).copy()
-          append(carry)
-          carry = null
-        } else if (!more) ended = true
-        else {
-          val r = src.next()
-          if (keyOf != null && keyOf(r) != key) { ended = true; carry = r }
-          else append(r)
-        }
+        } else if (rest.hasNext) ready = rest.next()
+        else return false
       }
       false
     }
 
     override def next(): InternalRow = {
       if (!hasNext) throw new NoSuchElementException
-      val i = emitted
-      val row = if (hi > 0) pending.removeFirst() else current
+      val key = ready
+      val i = key.emitted
+      val row = if (hi > 0) key.pending.removeFirst() else current
       var k = 0
       var j = math.max(0, i + lo)
       var s = j % cap
-      val end = math.min(n - 1, i + hi)
+      val end = math.min(key.n - 1, i + hi)
       while (j <= end) {
-        if (valid(s)) { view.buf(k) = vals(s); k += 1 }
+        if (key.valid(s)) { view.buf(k) = key.vals(s); k += 1 }
         j += 1
         s = if (s + 1 == cap) 0 else s + 1
       }
@@ -438,7 +472,7 @@ object RollingApplyExec {
         view.length = k
         result.setDouble(0, frame(view))
       } else result.setNullAt(0)
-      emitted += 1
+      key.emitted += 1
       emit(joined(row, result))
     }
   }

@@ -37,13 +37,16 @@ import org.apache.spark.sql.functions._
   *
   * Arbitrary (non-algebraic) window UDFs: [[rollingCollect]] runs the
   * reference's black-box `rolling.apply(func)` as one operator,
-  * [[RollingApply]]: with keys, the same exchange + sort as a window;
-  * without keys, no exchange and no sort on a range-ordered input (each
-  * task reads the first rows of the ranges after its own for its last
-  * frames) and one sorted partition otherwise. Then one streaming pass
-  * per partition keeps a ring of the last w values per group and hands
-  * `func` a view of the frame (O(w) memory per group, nothing
-  * materialized per row). The other black-box forms —
+  * [[RollingApply]]: with keys, a hash exchange on the keys and a sort
+  * on the order alone (one ring per key); without keys, no exchange
+  * and no sort on a range-ordered input (each task reads the first
+  * rows of the ranges after its own for its last frames) and one
+  * sorted partition otherwise. Then one streaming pass per partition
+  * keeps a ring of the last w values per key and hands `func` a view
+  * of the frame (O(w) memory per key, nothing materialized per row).
+  * Running aggregates ([[expandingAgg]]) run the same way, as
+  * [[RunningWindow]]: one aggregation buffer per key. The other
+  * black-box forms —
   * [[rollingRangeCollect]], [[expandingCollect]], [[rollingTableApply]]
   * — still materialize each frame with `collect_list` and apply a Scala
   * UDF. Prefer algebraic rewrite whenever the function is recognizable
@@ -269,24 +272,25 @@ object Windows {
 
   /** Black-box rolling UDF — pandas `rolling(w).apply(f)` — as one
     * [[RollingApply]] operator: one streaming pass per partition with a
-    * ring of the frame's values per group, handing `f` a view of the
+    * ring of the frame's values per key, handing `f` a view of the
     * frame (null values are left out of it and of the `minPeriods`
-    * count). With `partitionBy` keys the rows first go through the
-    * window's hash exchange + sort. Without keys, an input already
-    * range-partitioned and sorted by `orderBy`, deterministic, and sure
-    * to hand over tied rows in the same order when read twice (a cached
-    * or `spark.range` frame, or a sort over every column; the tie rule
-    * of [[RollingApplyExec]]) is read as it is, one task per partition,
-    * each taking at most `window` rows from the partitions after its
-    * own for its last frames (pandarallel's chunk-plus-margin
-    * protocol); any other ungrouped input is gathered into one sorted
-    * partition. Memory is O(window) per group; `f` runs outside
-    * codegen (same trade the reference makes for arbitrary Python) and
-    * must not keep the `Seq` it is given. With `minPeriods < window`
-    * `f` sees shorter frames near edges — exactly pandas'
-    * rolling.apply contract. Progress ticks once per `f` call (valid
-    * windows only) — the operator's work unit is the row; the
-    * reference's per-group unit
+    * count). With `partitionBy` keys the rows first go through a hash
+    * exchange on the keys and a sort on `orderBy` alone; each task keeps
+    * one ring per key (memory: distinct keys in a partition × the ring
+    * plus up to `hi` rows read ahead, not spillable). Without keys, an
+    * input already range-partitioned and sorted by `orderBy`,
+    * deterministic, and sure to hand over tied rows in the same order
+    * when read twice (a cached or `spark.range` frame, or a sort over
+    * every column; the tie rule of [[RollingApplyExec]]) is read as it
+    * is, one task per partition, each taking at most `window` rows from
+    * the partitions after its own for its last frames (pandarallel's
+    * chunk-plus-margin protocol); any other ungrouped input is gathered
+    * into one sorted partition. `f` runs outside codegen (same trade
+    * the reference makes for arbitrary Python) and must not keep the
+    * `Seq` it is given. With `minPeriods < window` `f` sees shorter
+    * frames near edges — exactly pandas' rolling.apply contract.
+    * Progress ticks once per `f` call (valid windows only) — the
+    * operator's work unit is the row; the reference's per-group unit
     * (rolling_groupby.py:71-74) corresponds to the hash-exchange groups
     * the task listener already tracks.
     */
@@ -313,6 +317,14 @@ object Windows {
     * `expanding(min_periods=n)` (default 1) is replayed as a null
     * warm-up: output is null until the frame holds >= n observations
     * (the reference replays this attribute — expanding_groupby.py:35-40).
+    *
+    * Registers [[RunningWindow.Strategy]] on the session: when `agg` is
+    * a declarative aggregate (`sum`, `count`, `min`, `max`, `avg`,
+    * `last`, ...), the window runs as [[RunningWindowExec]] — after the
+    * hash exchange on the keys, each partition is sorted by the order
+    * alone and each task keeps one aggregation buffer per key (memory:
+    * distinct keys in a partition × one buffer, not spillable). Any
+    * other aggregate keeps `WindowExec`.
     */
   def expandingAgg(
       df: DataFrame,
@@ -321,6 +333,7 @@ object Windows {
       partitionBy: Seq[Column],
       outName: String,
       minPeriods: Int = 1)(agg: Column => Column): DataFrame = {
+    RunningWindow.register(df.sparkSession)
     val frame = expandingFrame(orderBy, partitionBy)
     val out =
       if (minPeriods > 1)

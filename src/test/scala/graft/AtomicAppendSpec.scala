@@ -458,4 +458,23 @@ class AtomicAppendSpec extends AnyFunSuite {
     assert(
       AtomicAppend.read(spark, idx).count() === evens.count() + 10)
   }
+
+  test("readWithSeg labels each flat leg by its segment; a file outside one fails the read") {
+    val root = java.nio.file.Files.createTempDirectory("graft-atomic-seg").toString + "/idx"
+    spark.range(0, 3).toDF("id").write.parquet(root)
+    AtomicAppend.publish(spark, root)(p => spark.range(3, 5).toDF("id").write.mode("overwrite").parquet(p))
+    val labels = AtomicAppend.readWithSeg(spark, root).select("id", "__seg").as[(Long, Long)].collect().sorted
+    assert(labels.toSeq === Seq((0L, 0L), (1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L)))
+    // the flat scan lists only the files directly under each `_seg-<n>`,
+    // so the label is driven here with file names it never hands over
+    def label(file: String) =
+      Seq(file).toDF("f").select(AtomicAppend.segOfFile(col("f"), root)).as[Long].head()
+    assert(label(s"file:$root/_seg-7/part-0.parquet") === 7L)
+    assert(label("file:/a/_seg-2/idx/_seg-12/part-0.parquet") === 12L)
+    for (outside <- Seq(s"file:$root/_seg-1/nested/part-0.parquet", s"file:$root/part-0.parquet")) {
+      val e = intercept[Exception](label(outside))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      assert(messages.contains(s"file outside a _seg-<n> directory of $root: $outside"), messages)
+    }
+  }
 }

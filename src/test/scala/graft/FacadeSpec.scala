@@ -131,6 +131,47 @@ class FacadeSpec extends AnyFunSuite {
     assert(local.indexOfSlice(Seq(10.0, 30.0)) >= 0)
   }
 
+  test("O5 black-box forms group by the named columns; keyFn names the groups") {
+    val df = (0 until 400).map(i => (i % 40, i % 7, i.toDouble)).toDF("k", "j", "x")
+    val gb = df.parallelGroupBy("k")
+    val sums = gb.applyGroups(_.getInt(0)) { (k, it) => Iterator((k, it.map(_.getDouble(2)).sum)) }
+    assert(!sums.queryExecution.executedPlan.toString.contains("AppendColumns"))
+    val want = (0 until 400).groupBy(_ % 40).map { case (k, is) => k -> is.map(_.toDouble).sum }
+    assert(sums.collect().toMap === want)
+    assert(gb.applyKeyed(_.getInt(0))((_, it) => Iterator(it.size)).collect().toMap ===
+      want.map { case (k, _) => k -> 10 })
+    // the mutation shapes: per-group running sums, back in source order
+    // (transform) or grouped (transformLocal)
+    val cum = (k: Int, rows: Seq[org.apache.spark.sql.Row]) =>
+      rows.map(_.getDouble(2)).scanLeft(k * 1000.0)(_ + _).tail
+    val viaColumns = gb.transform(_.getInt(0))(cum).collect().toSeq
+    assert(viaColumns === graft.ops.GroupApply.transformGroups(df)(_.getInt(0))(cum).collect().toSeq)
+    assert(gb.transformLocal(_.getInt(0))(cum).collect().sorted.toSeq === viaColumns.sorted)
+  }
+
+  test("O5: a keyFn finer or coarser than the named columns fails the call") {
+    val df = (0 until 400).map(i => (i % 40, i % 7, i.toDouble)).toDF("k", "j", "x")
+    val gb = df.parallelGroupBy("k")
+    def failure(run: => Any): String = {
+      val e = intercept[Exception](run)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    }
+    // finer: rows of one k give several keys; f reads only the first
+    // row, and the rows it leaves unread are checked too
+    val finer = failure(gb.applyGroups(r => (r.getInt(0), r.getInt(1))) { (k, it) =>
+      Iterator((k._1, it.next().getDouble(2)))
+    }.collect())
+    assert(finer.contains("finer than the columns"), finer)
+    assert(failure(gb.transformLocal(r => r.getInt(1))((_, rows) => rows.map(_ => 0)).collect())
+      .contains("finer than the columns"))
+    // coarser: 40 groups named by 4 keys over at most 4 tasks, so two
+    // groups with one key meet in a task
+    val coarser = failure(gb.applyGroups(_.getInt(0) / 10)((k, it) => Iterator((k, it.size))).collect())
+    assert(coarser.contains("coarser than the columns"), coarser)
+    assert(failure(gb.applyKeyed(_.getInt(0) % 4)((_, it) => Iterator(it.size)).collect())
+      .contains("coarser than the columns"))
+  }
+
   test("rolling attribute replay: center/closed frames, min_periods warm-up") {
     // pandas fixed-window bounds on a known sequence: values 1..6, w=3
     val df = (1 to 6).map(i => (i.toLong, i.toDouble)).toDF("i", "x")

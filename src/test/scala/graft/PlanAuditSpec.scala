@@ -118,12 +118,7 @@ class PlanAuditSpec extends AnyFunSuite {
     "q214_bm25_topk", // the (N, avgdl) global 1-row aggregates' final combine
     "q219_sq_topk") // per-dim bounds: <= dim-row partials combine to a 1-row frame
 
-  private def planOf(name: String): String =
-    SparkEntry
-      .queries(name)(spark, TestSpark.sf)
-      .queryExecution
-      .executedPlan
-      .toString
+  private def planOf(name: String): String = built(name)._1
 
   /** Queries whose STAGED (pre-reroot) subtrees are allowed a BNL —
     * `Stage.materialize*` re-roots plans at a LogicalRDD, so these
@@ -155,14 +150,21 @@ class PlanAuditSpec extends AnyFunSuite {
     * build-time subtrees depends on suite ordering — the query-path
     * stagings (the ones that execute per query) are always captured.
     */
-  private def stagedPlansOf(name: String): Seq[String] = {
-    val staged = scala.collection.mutable.ArrayBuffer.empty[String]
-    graft.ops.Stage.stagedPlanProbe = Some(p => { staged += p; () })
-    try {
-      SparkEntry.queries(name)(spark, TestSpark.sf)
-      staged.toSeq
-    } finally graft.ops.Stage.stagedPlanProbe = None
-  }
+  private def stagedPlansOf(name: String): Seq[String] = built(name)._2
+
+  /** Every declared query built once, with the staged-plan probe
+    * installed: its final physical plan and its staged subtrees. The
+    * sweeps below all read these.
+    */
+  private lazy val built: Map[String, (String, Seq[String])] =
+    SparkEntry.queries.keys.toSeq.sorted.map { n =>
+      val staged = scala.collection.mutable.ArrayBuffer.empty[String]
+      graft.ops.Stage.stagedPlanProbe = Some(p => { staged += p; () })
+      val df =
+        try SparkEntry.queries(n)(spark, TestSpark.sf)
+        finally graft.ops.Stage.stagedPlanProbe = None
+      n -> (df.queryExecution.executedPlan.toString, staged.toSeq)
+    }.toMap
 
   test("no declared query ever plans a CartesianProduct") {
     SparkEntry.queries.keys.toSeq.sorted.foreach { n =>

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{RollingApplyExec, Windows}
+import graft.ops.{RollingApplyExec, RunningWindow, RunningWindowExec, Windows}
 
 /** Physical-plan assertions — the scale contract, checked, not assumed:
   * filters/projections reach the parquet scan, small dims broadcast,
@@ -484,5 +484,44 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val exchanges = collect(ops.head) { case e: ShuffleExchangeExec => e.outputPartitioning }
     assert(exchanges.size === 1 && exchanges.head.isInstanceOf[RangePartitioning], p)
     assert(!p.contains("ExistingRDD") && !p.contains("LogicalRDD"), p)
+  }
+
+  test("q10 and q11 keep state per key over one hash exchange and a Sort on event_id alone") {
+    Seq("q10_grouped_rolling", "q11_grouped_expanding").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, TestSpark.sf)
+      val p = df.queryExecution.executedPlan
+      val ops = collect(p) {
+        case r: RollingApplyExec => r
+        case r: RunningWindowExec => r
+      }
+      assert(ops.size === 1, s"$q:\n$p")
+      assert(ops.head.children.head.isInstanceOf[SortExec], s"$q:\n$p")
+      val sorts = collect(p) { case s: SortExec => s.sortOrder.map(_.child.sql) }
+      assert(sorts === Seq(Seq("event_id")), s"$q:\n$p")
+      val exchanges = collect(p) { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
+      assert(exchanges.size === 1 && exchanges.head.startsWith("hashpartitioning(user_id"), s"$q:\n$p")
+      assert(collect(p) { case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty, s"$q:\n$p")
+    }
+  }
+
+  test("a WindowExec on (user_id, event_id) feeding the running operator adds no second Sort") {
+    val byUser = org.apache.spark.sql.expressions.Window.partitionBy("user_id").orderBy("event_id")
+    // the running sum reads the lag's output, so the two windows stay apart
+    val lagged = Tables.events(spark, TestSpark.sf).withColumn("prev", lag("value", 1).over(byUser))
+    val out = Windows.expandingAgg(lagged, col("prev"), Seq(col("event_id")), Seq(col("user_id")), "cum")(sum)
+    val p = out.queryExecution.executedPlan
+    assert(collect(p) { case r: RunningWindowExec => r }.size === 1, p)
+    assert(collect(p) { case w: org.apache.spark.sql.execution.window.WindowExec => w }.size === 1, p)
+    val sorts = collect(p) { case s: SortExec => s.sortOrder.map(_.child.sql) }
+    assert(sorts === Seq(Seq("user_id", "event_id")), p)
+    assert(collect(p) { case e: ShuffleExchangeExec => e }.size === 1, p)
+  }
+
+  test("a window above a running window on the same keys keeps both on WindowExec and one Sort (q136)") {
+    RunningWindow.register(spark)
+    val p = SparkEntry.queries("q136_weighted_median")(spark, TestSpark.sf).queryExecution.executedPlan
+    assert(collect(p) { case r: RunningWindowExec => r }.isEmpty, p)
+    assert(collect(p) { case w: org.apache.spark.sql.execution.window.WindowExec => w }.size === 2, p)
+    assert(collect(p) { case s: SortExec => s }.size === 1, p)
   }
 }

@@ -118,15 +118,37 @@ class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     (rows.toMap, counter.value)
   }
 
+  private val batches = configs.grouped(32).toSeq
+
+  /** The reference's cells and ticks over one set of input rows, per
+    * batch, computed once: the rows, not their partitioning, fix the
+    * answer, so every partition count compares against the same one.
+    */
+  private val references =
+    scala.collection.mutable.Map.empty[(String, Int), (Map[Long, Seq[Option[Long]]], Long)]
+  private def reference(rows: String, input: => DataFrame, grouped: Boolean, b: Int) =
+    references.getOrElseUpdate(
+      (s"$rows grouped=$grouped", b),
+      run(viaReference, batches(b), input, grouped, s"ref-$rows-grouped=$grouped-batch=$b"))
+
   for {
     grouped <- Seq(false, true)
     parts <- Seq(1, 3, 7)
   } test(s"bit-identical to collect_list + UDF (grouped=$grouped, $parts partitions)") {
-    configs.grouped(32).zipWithIndex.foreach { case (batch, b) =>
+    batches.zipWithIndex.foreach { case (batch, b) =>
       val tag = s"grouped=$grouped parts=$parts batch=$b"
-      val input = data.repartition(parts)
-      val (got, ticks) = run(viaOperator, batch, input, grouped, s"op-$tag")
-      val (want, refTicks) = run(viaReference, batch, input, grouped, s"ref-$tag")
+      val (got, ticks) = run(viaOperator, batch, data.repartition(parts), grouped, s"op-$tag")
+      val (want, refTicks) = reference("data", data, grouped, b)
+      assertSame(tag, batch, got, ticks, want, refTicks)
+    }
+  }
+
+  test("grouped, every key unique: one row per key state, bit-identical") {
+    val unique = data.withColumn("k", col("id"))
+    batches.zipWithIndex.foreach { case (batch, b) =>
+      val tag = s"unique keys batch=$b"
+      val (got, ticks) = run(viaOperator, batch, unique.repartition(3), grouped = true, s"op-$tag")
+      val (want, refTicks) = reference("unique keys", unique, grouped = true, b)
       assertSame(tag, batch, got, ticks, want, refTicks)
     }
   }
@@ -227,10 +249,11 @@ class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         assert(sizes.exists(s => s > 0 && s < 8), s"no partition shorter than the window: $sizes")
       }
       val ids = input.select("id").collect().map(_.getLong(0)).toSeq.sorted
-      configs.grouped(32).zipWithIndex.foreach { case (batch, b) =>
+      batches.zipWithIndex.foreach { case (batch, b) =>
         val tag = s"$way parts=$parts batch=$b"
         val (got, ticks, order) = runEach(input, batch, s"op-$tag")
-        val (want, refTicks) = run(viaReference, batch, input, grouped = false, s"ref-$tag")
+        // both ways hold the same rows
+        val (want, refTicks) = reference("range-ordered", withValues(spark.range(0, 48).toDF()).where(kept), grouped = false, b)
         assertSame(tag, batch, got, ticks, want, refTicks)
         order.zip(batch).foreach { case (o, config) =>
           assert(o === ids, s"$tag config=$config: rows out of global order")
@@ -271,6 +294,37 @@ class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     (id, bits(v), bits(r))
   }
 
+  /** Each configuration of `batch` on its own over `input`, unioned:
+    * (configuration, id, v, result) rows.
+    */
+  private def each(
+      input: DataFrame,
+      batch: Seq[(Int, Boolean, String, Option[Int])])(
+      rolling: (DataFrame, (Int, Boolean, String, Option[Int])) => DataFrame): DataFrame =
+    batch.zipWithIndex
+      .map { case (config, i) => rolling(input, config).select(lit(i).as("c"), col("id"), col("v"), col("r")) }
+      .reduce(_ union _)
+
+  /** Cells per configuration, as (id, v, result) bits. */
+  private def tiedCells(df: DataFrame): Map[Int, Seq[Cell]] =
+    df.collect().toSeq.groupBy(_.getInt(0)).map { case (c, rs) =>
+      c -> rs.map(r => cell(r.getLong(1), r.get(2), r.get(3)))
+    }
+
+  /** The reference over `input` with ties broken by value, per batch,
+    * computed once per set of rows: cells and ticks.
+    */
+  private val tiedReferences = scala.collection.mutable.Map.empty[(String, Int), (Map[Int, Seq[Cell]], Long)]
+  private def tiedReference(rows: String, input: DataFrame, keys: Seq[Column], b: Int) =
+    tiedReferences.getOrElseUpdate((rows, b), {
+      val counter = Progress.rowCounter(spark, s"ref-$rows-batch=$b")
+      val cells = tiedCells(each(input, batches(b)) { case (df, (w, center, closed, mp)) =>
+        RollingReference.rollingCollect(
+          df, col("v"), Seq(col("id"), col("v")), keys, w, "r", mp, center, closed, Some(counter))(wmean)
+      })
+      (cells, counter.value)
+    })
+
   for (parts <- Seq(3, 7)) test(
     s"duplicate keys under a sort over every column ($parts ranges): each row once, same frames") {
     // a sort over a shuffle: the range plan rests on tied rows being equal
@@ -278,20 +332,11 @@ class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val byKey: Ordering[Cell] = Ordering.by[Cell, (Long, Option[Double])](
       c => (c._1, c._2.map(java.lang.Double.longBitsToDouble)))(
       Ordering.Tuple2(Ordering.Long, Ordering.Option(Ordering.Double.TotalOrdering)))
-    configs.grouped(32).zipWithIndex.foreach { case (batch, b) =>
+    batches.zipWithIndex.foreach { case (batch, b) =>
       val tag = s"tied parts=$parts batch=$b"
       val counter = Progress.rowCounter(spark, s"op-$tag")
-      val refCounter = Progress.rowCounter(spark, s"ref-$tag")
-      def each(rolling: (DataFrame, (Int, Boolean, String, Option[Int])) => DataFrame) =
-        batch.zipWithIndex
-          .map { case (config, i) => rolling(input, config).select(lit(i).as("c"), col("id"), col("v"), col("r")) }
-          .reduce(_ union _)
-      val out = each { case (df, (w, center, closed, mp)) =>
+      val out = each(input, batch) { case (df, (w, center, closed, mp)) =>
         viaOperator(df, Nil, w, "r", mp, center, closed, Some(counter))
-      }
-      val ref = each { case (df, (w, center, closed, mp)) =>
-        RollingReference.rollingCollect(
-          df, col("v"), Seq(col("id"), col("v")), Nil, w, "r", mp, center, closed, Some(refCounter))(wmean)
       }
       val ops = collect(out.queryExecution.executedPlan) { case r: RollingApplyExec => r }
       assert(ops.size === batch.size, tag)
@@ -300,10 +345,8 @@ class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         val exchanges = collect(r.child) { case e: ShuffleExchangeExec => e.outputPartitioning }
         assert(exchanges.forall(_.isInstanceOf[RangePartitioning]), s"$tag:\n${out.queryExecution.executedPlan}")
       }
-      def cells(df: DataFrame) = df.collect().toSeq.groupBy(_.getInt(0)).map { case (c, rs) =>
-        c -> rs.map(r => cell(r.getLong(1), r.get(2), r.get(3)))
-      }
-      val (got, want) = (cells(out), cells(ref))
+      val got = tiedCells(out)
+      val (want, refTicks) = tiedReference("tied", tied, Nil, b)
       batch.indices.foreach { i =>
         val config = batch(i)
         assert(got(i).sorted === want(i).sorted, s"$tag config=$config")
@@ -311,8 +354,63 @@ class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       }
       val calls = want.valuesIterator.flatten.count(_._3.isDefined).toLong
       assert(counter.value === calls, s"$tag: operator ticks")
-      assert(refCounter.value === calls, s"$tag: reference ticks")
+      assert(refTicks === calls, s"$tag: reference ticks")
     }
+  }
+
+  /** [[tied]] rows spread over four keys and null, so that keys
+    * interleave and rows tie on (key, id).
+    */
+  private lazy val tiedKeyed: DataFrame =
+    tied.withColumn("k", when(pmod(col("id"), lit(5)) < 4, pmod(col("id") * 7, lit(4))))
+
+  for (parts <- Seq(1, 3)) test(
+    s"grouped, ties inside a group, input already sorted by keys ++ order ($parts partitions): no exchange, no sort") {
+    val input = tiedKeyed.repartition(parts, col("k")).sortWithinPartitions("k", "id", "v")
+    batches.zipWithIndex.foreach { case (batch, b) =>
+      val tag = s"tied keyed parts=$parts batch=$b"
+      val counter = Progress.rowCounter(spark, s"op-$tag")
+      val out = each(input, batch) { case (df, (w, center, closed, mp)) =>
+        viaOperator(df, Seq(col("k")), w, "r", mp, center, closed, Some(counter))
+      }
+      val ops = collect(out.queryExecution.executedPlan) { case r: RollingApplyExec => r }
+      assert(ops.size === batch.size, tag)
+      ops.foreach { r =>
+        val sorts = collect(r.child) { case x: SortExec => x.sortOrder.map(_.child.sql) }
+        assert(sorts === Seq(Seq("k", "id", "v")),
+          s"$tag: the input's own sort only:\n${out.queryExecution.executedPlan}")
+      }
+      val got = tiedCells(out)
+      val (want, refTicks) = tiedReference("tied keyed", tiedKeyed, Seq(col("k")), b)
+      batch.indices.foreach { i =>
+        assert(got(i).sorted === want(i).sorted, s"$tag config=${batch(i)}")
+      }
+      val calls = want.valuesIterator.flatten.count(_._3.isDefined).toLong
+      assert(counter.value === calls, s"$tag: operator ticks")
+      assert(refTicks === calls, s"$tag: reference ticks")
+    }
+  }
+
+  test("a centered grouped rolling claims no order: the grouped rolling after it sorts again") {
+    // the centered frame holds each key's last row back to the end of
+    // the partition, so keys no longer come one after another; a window
+    // trusting the input's (k, id) order would split those keys
+    val input = data.repartition(3, col("k")).sortWithinPartitions("k", "id")
+    def chain(first: Rolling) = Windows
+      .rollingAgg(first(input, Seq(col("k")), 3, "a", Some(1), true, "right", None),
+        col("a"), Seq(col("id")), Seq(col("k")), 2, Some(1))(org.apache.spark.sql.functions.sum)
+      .select(col("id"), col("a"), col("__rolling__").as("b"))
+    val out = chain(viaOperator)
+    val plan = out.queryExecution.executedPlan
+    val op = collect(plan) { case r: RollingApplyExec => r }
+    assert(op.size === 1 && op.head.outputOrdering.isEmpty, plan)
+    // the input's own sort serves the first; the second sorts again
+    assert(collect(op.head) { case x: SortExec => x }.size === 1, plan)
+    assert(collect(plan) { case x: SortExec => x }.size === 2, plan)
+    def cellsOf(df: DataFrame) = df.collect().map { r =>
+      r.getLong(0) -> Seq(1, 2).map(j => Option(r.get(j)).map(x => java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double])))
+    }.toMap
+    assert(cellsOf(out) === cellsOf(chain(viaReference)))
   }
 
   test("duplicate keys under a sort that leaves a column out: one sorted partition, unless cached") {
