@@ -154,7 +154,7 @@ object Pandarallel {
       */
     def applyGroups[K: Encoder, T: Encoder](keyFn: Row => K)(
         f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[T] =
-      GroupApply.flatMapGroups(df, columns = Some(keys))(keyFn)(f)
+      GroupApply.flatMapGroups(df, keys)(keyFn)(f)
 
     /** O5, "new object" result shape: pandas puts group keys in the
       * result index (dataframe_groupby.py:49-81) — here they become the
@@ -163,7 +163,7 @@ object Pandarallel {
       */
     def applyKeyed[K: Encoder, T: Encoder](keyFn: Row => K)(
         f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[(K, T)] =
-      GroupApply.applyGroupsKeyed(df, Some(keys))(keyFn)(f)
+      GroupApply.applyGroupsKeyed(df, keys)(keyFn)(f)
 
     /** O5, "mutation" result shape: pandas keeps the original row index
       * (utils.py:61-85 sniff) — here outputs return in source-row order.
@@ -172,7 +172,7 @@ object Pandarallel {
       */
     def transform[K: Encoder, T: Encoder](keyFn: Row => K)(
         f: (K, Seq[Row]) => Seq[T]): Dataset[T] =
-      GroupApply.transformGroups(df, Some(keys))(keyFn)(f)
+      GroupApply.transformGroups(df, keys)(keyFn)(f)
 
     /** [[transform]] minus the global order restoration (one shuffle
       * instead of two — [[GroupApply.transformGroupsLocal]]): same
@@ -183,7 +183,7 @@ object Pandarallel {
       */
     def transformLocal[K: Encoder, T: Encoder](keyFn: Row => K)(
         f: (K, Seq[Row]) => Seq[T]): Dataset[T] =
-      GroupApply.transformGroupsLocal(df, Some(keys))(keyFn)(f)
+      GroupApply.transformGroupsLocal(df, keys)(keyFn)(f)
 
     /** O7 entry (core.py:543-545) with rolling-attribute replay
       * (rolling_groupby.py:35-40).

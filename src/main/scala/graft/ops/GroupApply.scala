@@ -31,11 +31,10 @@ import org.apache.spark.sql.functions.col
   * prefer [[agg]] (AQE-skew-aware, partials bound memory) wherever the
   * function is algebraic.
   *
-  * The black-box forms group by `keyFn` (`groupByKey`, which
-  * deserializes every row before the exchange to append the key), or,
-  * given `columns`, by those named columns ([[byColumns]]): the
-  * exchange and sort read the columns as they are, and `keyFn` only
-  * names each group.
+  * The black-box forms that take `keys` group by those named columns
+  * ([[byColumns]]): the exchange and sort read the columns as they are,
+  * with no per-row key column appended before the exchange, and
+  * `keyFn` only names each group.
   */
 object GroupApply {
 
@@ -93,13 +92,11 @@ object GroupApply {
     * sniff). Spark has no index, so the keys become leading columns —
     * every output row carries its group key automatically.
     */
-  def applyGroupsKeyed[K: Encoder, T: Encoder](
-      df: DataFrame,
-      columns: Option[Seq[String]] = None)(keyFn: Row => K)(
+  def applyGroupsKeyed[K: Encoder, T: Encoder](df: DataFrame, keys: Seq[String])(keyFn: Row => K)(
       f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[(K, T)] = {
     implicit val enc: Encoder[(K, T)] =
       Encoders.tuple(implicitly[Encoder[K]], implicitly[Encoder[T]])
-    groups(df, columns)(keyFn)((k: K, it: Iterator[Row]) => f(k, it).iterator.map(k -> _))
+    byColumns(df, keys)(keyFn)((k: K, it: Iterator[Row]) => f(k, it).iterator.map(k -> _))
   }
 
   /** pandas result-index shaping, "mutation" branch: when the UDF
@@ -121,13 +118,11 @@ object GroupApply {
     * global order is wasted work: use [[transformGroupsLocal]], which
     * stops after the per-group ordering and skips the exchange.
     */
-  def transformGroups[K: Encoder, T: Encoder](
-      df: DataFrame,
-      columns: Option[Seq[String]] = None)(keyFn: Row => K)(
+  def transformGroups[K, T: Encoder](df: DataFrame, keys: Seq[String])(keyFn: Row => K)(
       f: (K, Seq[Row]) => Seq[T]): Dataset[T] = {
     implicit val pairEnc: Encoder[(Long, T)] =
       Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[T]])
-    transformGroupsIndexed(df, columns)(keyFn)(f)
+    transformGroupsIndexed(df, keys)(keyFn)(f)
       .orderBy(col("_1"))
       .map(_._2)(implicitly[Encoder[T]])
   }
@@ -138,24 +133,21 @@ object GroupApply {
     * contiguous and in source order, group order arbitrary) — one
     * shuffle total. Same-values-different-order vs [[transformGroups]].
     */
-  def transformGroupsLocal[K: Encoder, T: Encoder](
-      df: DataFrame,
-      columns: Option[Seq[String]] = None)(keyFn: Row => K)(
+  def transformGroupsLocal[K, T: Encoder](df: DataFrame, keys: Seq[String])(keyFn: Row => K)(
       f: (K, Seq[Row]) => Seq[T]): Dataset[T] = {
     implicit val pairEnc: Encoder[(Long, T)] =
       Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[T]])
-    transformGroupsIndexed(df, columns)(keyFn)(f).map(_._2)(implicitly[Encoder[T]])
+    transformGroupsIndexed(df, keys)(keyFn)(f).map(_._2)(implicitly[Encoder[T]])
   }
 
   /** Shared mutation-branch core: (source index, output) pairs, grouped,
     * per-group in source order.
     */
-  private def transformGroupsIndexed[K: Encoder, T: Encoder](
-      df: DataFrame,
-      columns: Option[Seq[String]])(keyFn: Row => K)(
+  private def transformGroupsIndexed[K, T: Encoder](df: DataFrame, keys: Seq[String])(
+      keyFn: Row => K)(
       f: (K, Seq[Row]) => Seq[T])(implicit
       pairEnc: Encoder[(Long, T)]): Dataset[(Long, T)] =
-    groups(graft.Index.attach(df), columns)(keyFn) { (k: K, it: Iterator[Row]) =>
+    byColumns(graft.Index.attach(df), keys)(keyFn) { (k: K, it: Iterator[Row]) =>
       val rows = it.toSeq.sortBy(_.getAs[Long](graft.Index.col))
       val out = f(k, rows)
       require(
@@ -168,27 +160,18 @@ object GroupApply {
   /** Black-box group UDF, many output rows per group (UDTF-like).
     * Counter ticks once per group, as above.
     */
-  def flatMapGroups[K: Encoder, T: Encoder](
+  def flatMapGroups[K, T: Encoder](
       df: DataFrame,
-      counter: Option[graft.progress.Progress.RowCounter] = None,
-      columns: Option[Seq[String]] = None)(
+      keys: Seq[String],
+      counter: Option[graft.progress.Progress.RowCounter] = None)(
       keyFn: Row => K)(
       f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[T] = {
     val g = counter match {
       case None    => f
       case Some(c) => (k: K, it: Iterator[Row]) => { c.tick(); f(k, it) }
     }
-    groups(df, columns)(keyFn)(g)
+    byColumns(df, keys)(keyFn)(g)
   }
-
-  /** `df`'s groups by `keyFn`, or by the named `columns` when given. */
-  private def groups[K: Encoder, T: Encoder](df: DataFrame, columns: Option[Seq[String]])(
-      keyFn: Row => K)(
-      f: (K, Iterator[Row]) => IterableOnce[T]): Dataset[T] =
-    columns match {
-      case None       => df.groupByKey(keyFn)(implicitly[Encoder[K]]).flatMapGroups(f)
-      case Some(keys) => byColumns(df, keys)(keyFn)(f)
-    }
 
   /** `df` grouped by the named `keys` columns: the hash exchange and the
     * sort read the columns as they are (no per-row key column appended

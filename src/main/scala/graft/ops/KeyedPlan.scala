@@ -27,11 +27,15 @@ private[ops] object KeyedPlan {
     * order (a window over the same spec below), keys ++ order as it is,
     * so a chained window adds no sort.
     */
-  def ordering(keys: Seq[Expression], order: Seq[SortOrder], child: SparkPlan): Seq[SortOrder] = {
-    val full = keys.map(SortOrder(_, Ascending)) ++ order
-    val sorted = keys.nonEmpty &&
+  def ordering(keys: Seq[Expression], order: Seq[SortOrder], child: SparkPlan): Seq[SortOrder] =
+    if (contiguous(keys, order, child)) keys.map(SortOrder(_, Ascending)) ++ order else order
+
+  /** Whether `child` is clustered by the non-empty `keys` and sorted by
+    * keys ++ order, so each key's rows arrive one after another and a
+    * key's state can go once the next key begins.
+    */
+  def contiguous(keys: Seq[Expression], order: Seq[SortOrder], child: SparkPlan): Boolean =
+    keys.nonEmpty &&
       child.outputPartitioning.satisfies(ClusteredDistribution(keys)) &&
-      SortOrder.orderingSatisfies(child.outputOrdering, full)
-    if (sorted) full else order
-  }
+      SortOrder.orderingSatisfies(child.outputOrdering, keys.map(SortOrder(_, Ascending)) ++ order)
 }

@@ -63,8 +63,12 @@ import scala.jdk.CollectionConverters._
   *
   * Memory: (distinct keys in a partition) × (the ring of
   * `hi - lo + 1` values, plus up to `hi` rows read ahead of the row to
-  * emit). Like pandarallel's per-worker chunk, this state is not
-  * spillable.
+  * emit, copied). Over an order-only sort a key's state lives to the
+  * end of the partition, so with `hi > 0` and about one key per row the
+  * partition's rows end up copied on the heap; over input already
+  * sorted by keys ++ order a key's state goes once the next key begins,
+  * so one key's state is held at a time. Like pandarallel's per-worker
+  * chunk, this state is not spillable.
   *
   * Output equals the `collect_list` + UDF form bit for bit (the test
   * suite keeps that form as its oracle): null values are left out of
@@ -187,9 +191,11 @@ object RollingApply {
   *    order alone ([[KeyedPlan.ordering]]: keys ++ order when the child
   *    is already sorted so). One state per key, found by a hash lookup
   *    on the key. With `hi > 0` a key's row leaves once the row `hi`
-  *    after it has been read, and each key's last rows at the end of the
-  *    partition, so rows leave out of arrival order and the operator
-  *    claims no output ordering;
+  *    after it has been read, and each key's last rows once the key
+  *    ends: at the end of the partition, so rows leave out of arrival
+  *    order and the operator claims no output ordering; or, over keys
+  *    ++ order, when the next key begins, so rows leave in arrival
+  *    order and the child's ordering holds;
   *  - no keys, and the child already range-partitioned and sorted by
   *    the order, with no nondeterministic expression in its tree: the
   *    child as it is (no exchange, no sort). Task `i` streams its own
@@ -266,10 +272,13 @@ final case class RollingApplyExec(
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     Seq(KeyedPlan.ordering(partitionSpec, orderSpec, child))
 
+  /** Keyed, and each key's rows arrive one after another. */
+  private lazy val contiguous: Boolean = KeyedPlan.contiguous(partitionSpec, orderSpec, child)
+
   // rows leave each task in the order they arrive, unless keyed rows
-  // wait for rows after them
+  // wait for rows after them to the end of the partition
   override def outputOrdering: Seq[SortOrder] =
-    if (partitionSpec.nonEmpty && frame.hi > 0) Nil else child.outputOrdering
+    if (partitionSpec.nonEmpty && frame.hi > 0 && !contiguous) Nil else child.outputOrdering
   override def outputPartitioning: Partitioning = child.outputPartitioning match {
     case p if rangeOrdered && p.numPartitions > 1 => UnknownPartitioning(p.numPartitions)
     case p => p
@@ -279,7 +288,7 @@ final case class RollingApplyExec(
     val in = child.output
     val result = AttributeReference("result", DoubleType)()
     val filled = in.map(a => if (a.exprId == slot.exprId) result else a)
-    val (v, keys, fr) = (value, partitionSpec, frame)
+    val (v, keys, fr, contig) = (value, partitionSpec, frame, contiguous)
     val rows = (own: Iterator[InternalRow], ahead: Iterator[InternalRow], skip: Int) =>
       new RollingApplyExec.Rows(
         own,
@@ -288,7 +297,8 @@ final case class RollingApplyExec(
         UnsafeProjection.create(Seq(v), in),
         if (keys.isEmpty) null else UnsafeProjection.create(keys, in),
         UnsafeProjection.create(filled, in :+ result),
-        fr)
+        fr,
+        contig)
     if (rangeOrdered)
       new RollingApplyExec.LookAheadRDD(
         child.execute(),
@@ -357,8 +367,11 @@ object RollingApplyExec {
     * then `ahead` (the partitions after it; empty with keys), with one
     * [[Key]] state per key (a single one when ungrouped). Row `i` of a
     * key leaves once row `i + hi` of that key has been read, or, for
-    * the last rows of each key, once the stream is done; rows read ahead
-    * of it wait, copied, in `pending`. Ungrouped, the stream's first
+    * the last rows of each key, once the key ends: when the stream is
+    * done, or, when the keys are `contiguous` (sorted by keys ++ order),
+    * when the next key's first row is read, and the ended key's state
+    * is dropped. Rows read ahead of the row to emit wait, copied, in
+    * `pending`. Ungrouped, the stream's first
     * `skip` rows only fill the ring, and emission stops `frame.behind`
     * rows past the end of `own`, so `ahead` is read only as far as the
     * last emitted frame needs.
@@ -370,7 +383,8 @@ object RollingApplyExec {
       valueOf: UnsafeProjection,
       keyOf: UnsafeProjection, // null when ungrouped
       emit: UnsafeProjection,
-      frame: RollingApply.Frame)
+      frame: RollingApply.Frame,
+      contiguous: Boolean)
       extends Iterator[InternalRow] {
     private val lo = frame.lo
     private val hi = frame.hi
@@ -389,11 +403,13 @@ object RollingApplyExec {
       val pending = if (hi > 0) new java.util.ArrayDeque[InternalRow]() else null
       var n = 0
       var emitted = 0
+      var ended = false // contiguous: the next key has begun
     }
 
     private val keys = if (keyOf == null) null else new java.util.HashMap[UnsafeRow, Key]()
     private val only = if (keyOf == null) new Key else null
     private var ready: Key = null // the key that took the last row, then each key in turn
+    private var finished: Key = null // contiguous: the key the last row read ended, if any
     private var current: InternalRow = null // the row to emit when hi <= 0
     private var rest: java.util.Iterator[Key] = null // keys left once the stream is done
     private var src = own
@@ -416,7 +432,15 @@ object RollingApplyExec {
       else {
         val k = keyOf(r)
         var s = keys.get(k)
-        if (s == null) { s = new Key; keys.put(k.copy(), s) }
+        if (s == null) {
+          if (contiguous && !keys.isEmpty) {
+            finished = keys.values.iterator.next()
+            finished.ended = true
+            keys.clear()
+          }
+          s = new Key
+          keys.put(k.copy(), s)
+        }
         s
       }
 
@@ -431,7 +455,7 @@ object RollingApplyExec {
 
     /** Whether `k`'s next row can leave: its frame is complete. */
     private def due(k: Key): Boolean =
-      k.emitted < k.n && k.emitted < stop && (rest != null || k.emitted + hi < k.n)
+      k.emitted < k.n && k.emitted < stop && (rest != null || k.ended || k.emitted + hi < k.n)
 
     override def hasNext: Boolean = {
       while (only == null || math.max(only.emitted, skip) < stop) {
@@ -444,6 +468,10 @@ object RollingApplyExec {
             val r = src.next()
             ready = keyFor(r)
             append(ready, r)
+            // with hi > 0 a key's first row is not due yet: the rows
+            // of the key it ended leave first
+            if (hi > 0 && finished != null) ready = finished
+            finished = null
           } else {
             rest = if (keys == null) Iterator.single(only).asJava else keys.values.iterator
             ready = null

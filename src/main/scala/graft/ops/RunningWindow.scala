@@ -20,6 +20,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   UnsafeProjection,
   UnsafeRow,
   WindowExpression,
+  WindowFunctionType,
   WindowSpecDefinition
 }
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
@@ -35,8 +36,9 @@ import org.apache.spark.sql.catalyst.plans.physical.{
   Distribution,
   Partitioning
 }
-import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.planning.PhysicalWindow
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** Running (expanding) aggregates per group key (O8) as one physical
   * operator: a window whose every expression is a declarative aggregate
@@ -51,60 +53,77 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * Each key's buffer goes through the function's own `initialValues`,
   * `updateExpressions` and `evaluateExpression`, as `WindowExec`'s
   * running frame does: each key sees the same updates in the same
-  * order, so the cells are the same bit for bit. Any other window
-  * (RANGE frames, a `FOLLOWING` bound, offset and ranking functions,
-  * imperative aggregates such as `collect_list`, `DISTINCT` or
-  * `FILTER`) keeps `WindowExec`.
+  * order, so the cells are the same bit for bit. The buffer outlives
+  * the row that updated it, so only aggregates whose buffer fields are
+  * all fixed-width values (numbers, booleans, dates, decimals) qualify:
+  * those are held by value, while a string, binary or nested buffer
+  * value (`max` or `last` over a string) may point into the input
+  * row's memory, which the next row overwrites. Any other window (such aggregates, RANGE frames,
+  * a `FOLLOWING` bound, offset and ranking functions, imperative
+  * aggregates such as `collect_list`, `DISTINCT` or `FILTER`) keeps
+  * `WindowExec`.
   *
-  * Memory: (distinct keys in a partition) × (one buffer per key). Like
+  * Memory: (distinct keys in a partition) × (one buffer per key); one
+  * buffer when the input already arrives sorted by keys ++ order. Like
   * pandarallel's per-worker chunk, this state is not spillable.
   */
 object RunningWindow {
 
-  /** Whether `e` is a running declarative aggregate. */
+  /** Whether `e` is a running declarative aggregate with a fixed-width
+    * buffer.
+    */
   private def running(e: NamedExpression): Boolean = e match {
     case Alias(
           WindowExpression(
-            AggregateExpression(_: DeclarativeAggregate, Complete, false, None, _),
+            AggregateExpression(f: DeclarativeAggregate, Complete, false, None, _),
             WindowSpecDefinition(_, _, SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow))),
           _) =>
-      true
+      f.aggBufferAttributes.forall(a => UnsafeRow.isMutable(a.dataType))
     case _ => false
   }
 
-  /** Set on a running window whose rows a `WindowExec` above needs
-    * sorted by keys ++ order: it stays a `WindowExec` too.
-    */
-  private val Feeds = TreeNodeTag[Unit]("graft.runningWindow.feedsWindow")
+  /** Whether `w` runs as [[RunningWindowExec]]. */
+  private def runs(w: logical.Window): Boolean = w.hint.isEmpty && w.windowExpressions.forall(running)
+
+  /** Whether Spark plans `w` as a `WindowExec` (no Python function). */
+  private def sql(w: logical.Window): Boolean = PhysicalWindow.unapply(w).exists(_._1 == WindowFunctionType.SQL)
 
   /** Plans a window of running declarative aggregates as
     * [[RunningWindowExec]]; leaves every other window to Spark.
     *
     * One exception keeps the sort count no higher than `WindowExec`'s:
-    * when another window sits above a running one (through projections
-    * and filters) and would be served by the running one's keys ++
-    * order sort (q136: a whole-group total over a running total on the
-    * same keys), both stay `WindowExec` and share that one sort. The
-    * planner meets the upper window first, and marks the lower one.
+    * when a window sits above a running one (through projections and
+    * filters) and would be served by the running one's keys ++ order
+    * sort (q136: a whole-group total over a running total on the same
+    * keys), both stay `WindowExec` and share that one sort. The planner
+    * meets the upper window first; this strategy then plans the upper
+    * window and the chain down to the running one in one step
+    * ([[sharing]]), so the choice rests on the plan being planned alone.
     */
   object Strategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case w: logical.Window
-          if w.hint.isEmpty && w.windowExpressions.forall(running) && w.getTagValue(Feeds).isEmpty =>
+      case w: logical.Window if runs(w) =>
         RunningWindowExec(w.windowExpressions, w.partitionSpec, w.orderSpec, planLater(w.child)) :: Nil
-      case w: logical.Window =>
-        windowBelow(w.child).filter(sortServes(_, w)).foreach(_.setTagValue(Feeds, ()))
-        Nil
+      case w: logical.Window if sql(w) =>
+        sharing(w.child, w).map(WindowExec(w.windowExpressions, w.partitionSpec, w.orderSpec, _)).toList
       case _ => Nil
     }
-  }
 
-  /** The window under `p`, through projections and filters. */
-  private def windowBelow(p: LogicalPlan): Option[logical.Window] = p match {
-    case w: logical.Window   => Some(w)
-    case logical.Project(_, c) => windowBelow(c)
-    case logical.Filter(_, c)  => windowBelow(c)
-    case _                   => None
+    /** `p` planned as Spark plans it, with `WindowExec` for the running
+      * window under it (through projections, filters and other windows
+      * the sort serves) that `upper`'s sort would share; None when there
+      * is none.
+      */
+    private def sharing(p: LogicalPlan, upper: logical.Window): Option[SparkPlan] = p match {
+      case l: logical.Window if sql(l) && sortServes(l, upper) =>
+        val below = sharing(l.child, l)
+        if (runs(l) || below.nonEmpty)
+          Some(WindowExec(l.windowExpressions, l.partitionSpec, l.orderSpec, below.getOrElse(planLater(l.child))))
+        else None
+      case logical.Project(list, c) => sharing(c, upper).map(ProjectExec(list, _))
+      case logical.Filter(cond, c)  => sharing(c, upper).map(FilterExec(cond, _))
+      case _                        => None
+    }
   }
 
   /** Whether `lower`'s keys ++ order sort meets `upper`'s. */
@@ -123,7 +142,8 @@ object RunningWindow {
   * or, when the child is already so, by keys ++ order. Each row updates
   * its key's buffer, found by a hash lookup on the key, and leaves at
   * once with the evaluated aggregates, so rows leave in the order they
-  * arrive.
+  * arrive. Over keys ++ order the map keeps only the current key's
+  * buffer.
   */
 final case class RunningWindowExec(
     windowExpression: Seq[NamedExpression],
@@ -157,6 +177,7 @@ final case class RunningWindowExec(
     }.toMap[Expression, Expression]
     val outExprs = in ++ windowExpression.map(_.transform(cells))
     val keys = partitionSpec
+    val contiguous = KeyedPlan.contiguous(partitionSpec, orderSpec, child)
     child.execute().mapPartitions { rows =>
       val init = MutableProjection.create(fns.flatMap(_.initialValues), Nil)
       val update = MutableProjection.create(fns.flatMap(_.updateExpressions), buffer ++ in)
@@ -182,7 +203,13 @@ final case class RunningWindowExec(
           } else {
             val k = keyOf(r)
             var b = buffers.get(k)
-            if (b == null) { b = fresh(); buffers.put(k.copy(), b) }
+            if (b == null) {
+              // a key new to the map ends the one before it when keys
+              // arrive one after another
+              if (contiguous) buffers.clear()
+              b = fresh()
+              buffers.put(k.copy(), b)
+            }
             b
           }
         update.target(b)(joined(b, r))

@@ -277,7 +277,9 @@ object Windows {
     * count). With `partitionBy` keys the rows first go through a hash
     * exchange on the keys and a sort on `orderBy` alone; each task keeps
     * one ring per key (memory: distinct keys in a partition × the ring
-    * plus up to `hi` rows read ahead, not spillable). Without keys, an
+    * plus up to `hi` rows read ahead, not spillable; one key's at a time
+    * when the input already arrives sorted by keys ++ order). Without
+    * keys, an
     * input already range-partitioned and sorted by `orderBy`,
     * deterministic, and sure to hand over tied rows in the same order
     * when read twice (a cached or `spark.range` frame, or a sort over
@@ -319,12 +321,14 @@ object Windows {
     * (the reference replays this attribute — expanding_groupby.py:35-40).
     *
     * Registers [[RunningWindow.Strategy]] on the session: when `agg` is
-    * a declarative aggregate (`sum`, `count`, `min`, `max`, `avg`,
-    * `last`, ...), the window runs as [[RunningWindowExec]] — after the
-    * hash exchange on the keys, each partition is sorted by the order
-    * alone and each task keeps one aggregation buffer per key (memory:
-    * distinct keys in a partition × one buffer, not spillable). Any
-    * other aggregate keeps `WindowExec`.
+    * a declarative aggregate with a fixed-width buffer (`sum`, `count`,
+    * `avg`, and `min`, `max`, `last` over numbers, dates or booleans),
+    * the window runs as [[RunningWindowExec]] — after the hash exchange
+    * on the keys, each partition is sorted by the order alone and each
+    * task keeps one aggregation buffer per key (memory: distinct keys in
+    * a partition × one buffer, not spillable). Any other aggregate
+    * (`min`/`max`/`last` over strings, `collect_list`, ...) keeps
+    * `WindowExec`.
     */
   def expandingAgg(
       df: DataFrame,

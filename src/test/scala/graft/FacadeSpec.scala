@@ -104,14 +104,14 @@ class FacadeSpec extends AnyFunSuite {
 
     // "mutation" branch with an ORDER-SENSITIVE UDF (per-group running
     // sum, the canonical pandas transform): the UDF must see each
-    // group's rows in SOURCE order even though the groupByKey shuffle's
+    // group's rows in SOURCE order even though the group shuffle's
     // arrival order is arbitrary (the 5-row toDF spreads one row per
     // input partition, so the group assembles from 3 separate map
     // outputs), and outputs return in source-row order
     val src = Seq(("a", 1.0), ("b", 10.0), ("a", 3.0), ("b", 20.0), ("a", 5.0))
       .toDF("k", "x")
     val cumsum = graft.ops.GroupApply
-      .transformGroups(src)(_.getString(0)) { (_, rows) =>
+      .transformGroups(src, Seq("k"))(_.getString(0)) { (_, rows) =>
         rows.map(_.getDouble(1)).scanLeft(0.0)(_ + _).tail
       }
       .collect().toSeq
@@ -121,7 +121,7 @@ class FacadeSpec extends AnyFunSuite {
     // transformGroupsLocal: same values (per-group still in source
     // order), but no global order restoration — one exchange fewer
     val local = graft.ops.GroupApply
-      .transformGroupsLocal(src)(_.getString(0)) { (_, rows) =>
+      .transformGroupsLocal(src, Seq("k"))(_.getString(0)) { (_, rows) =>
         rows.map(_.getDouble(1)).scanLeft(0.0)(_ + _).tail
       }
       .collect().toSeq
@@ -145,7 +145,7 @@ class FacadeSpec extends AnyFunSuite {
     val cum = (k: Int, rows: Seq[org.apache.spark.sql.Row]) =>
       rows.map(_.getDouble(2)).scanLeft(k * 1000.0)(_ + _).tail
     val viaColumns = gb.transform(_.getInt(0))(cum).collect().toSeq
-    assert(viaColumns === graft.ops.GroupApply.transformGroups(df)(_.getInt(0))(cum).collect().toSeq)
+    assert(viaColumns === (0 until 400).map(i => (i % 40 to i by 40).foldLeft(i % 40 * 1000.0)(_ + _)))
     assert(gb.transformLocal(_.getInt(0))(cum).collect().sorted.toSeq === viaColumns.sorted)
   }
 

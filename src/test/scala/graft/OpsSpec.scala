@@ -63,7 +63,7 @@ class OpsSpec extends AnyFunSuite {
   test("O5 flatMapGroups: DataFrame-returning group UDF") {
     val out = GroupApply
       .flatMapGroups[String, (String, Double)](
-        li.select("l_returnflag", "l_quantity"))(
+        li.select("l_returnflag", "l_quantity"), Seq("l_returnflag"))(
         _.getAs[String]("l_returnflag")) { (k, it) =>
         val qs = it.map(_.getAs[Double]("l_quantity")).toArray
         Iterator.single((k, qs.max - qs.min))

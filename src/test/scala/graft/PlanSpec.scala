@@ -517,6 +517,32 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(collect(p) { case e: ShuffleExchangeExec => e }.size === 1, p)
   }
 
+  test("planning a window above a running one leaves the running one's own plan alone") {
+    RunningWindow.register(spark)
+    val byUser = org.apache.spark.sql.expressions.Window.partitionBy("user_id").orderBy("event_id")
+    val running = Tables.events(spark, TestSpark.sf)
+      .withColumn("cum", sum("value").over(byUser.rowsBetween(Long.MinValue, 0)))
+    val total = running.withColumn("tot", sum("cum").over(org.apache.spark.sql.expressions.Window.partitionBy("user_id")))
+    val above = total.queryExecution.executedPlan
+    assert(collect(above) { case r: RunningWindowExec => r }.isEmpty, above)
+    assert(collect(above) { case w: org.apache.spark.sql.execution.window.WindowExec => w }.size === 2, above)
+    assert(collect(above) { case s: SortExec => s }.size === 1, above)
+    // the strategy over the very nodes of the pair's plan: the upper
+    // window takes the lower one with it, and leaves no mark on it, so
+    // the lower one planned alone afterwards is still running
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    def node(name: String) = total.queryExecution.optimizedPlan.collect {
+      case w: LWindow if w.windowExpressions.exists(_.name == name) => w
+    }.head
+    val pair = RunningWindow.Strategy(node("tot"))
+    assert(RunningWindow.Strategy(node("cum")).exists(_.isInstanceOf[RunningWindowExec]))
+    assert(pair.size === 1, pair)
+    assert(pair.head.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }.size === 2, pair)
+    val alone = running.queryExecution.executedPlan
+    assert(collect(alone) { case r: RunningWindowExec => r }.size === 1, alone)
+    assert(collect(alone) { case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty, alone)
+  }
+
   test("a window above a running window on the same keys keeps both on WindowExec and one Sort (q136)") {
     RunningWindow.register(spark)
     val p = SparkEntry.queries("q136_weighted_median")(spark, TestSpark.sf).queryExecution.executedPlan

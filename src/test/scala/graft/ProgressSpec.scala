@@ -54,7 +54,7 @@ class ProgressSpec extends AnyFunSuite {
     val li = Tables.lineitem(spark, TestSpark.sf)
     val nGroups = Progress.totals.groups(li, Seq("l_returnflag"))
     graft.ops.GroupApply
-      .flatMapGroups(li.select("l_returnflag", "l_quantity"), Some(counter))(
+      .flatMapGroups(li.select("l_returnflag", "l_quantity"), Seq("l_returnflag"), Some(counter))(
         _.getString(0)) { (k, it) =>
         Iterator.single((k, it.map(_.getDouble(1)).sum))
       }

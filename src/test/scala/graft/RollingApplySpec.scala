@@ -391,10 +391,26 @@ class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("a centered grouped rolling claims no order: the grouped rolling after it sorts again") {
+  test("a centered grouped rolling over an order-only sort claims no order") {
     // the centered frame holds each key's last row back to the end of
-    // the partition, so keys no longer come one after another; a window
-    // trusting the input's (k, id) order would split those keys
+    // the partition, so rows leave out of `id` order; a sort on `id`
+    // above must stay
+    val first = viaOperator(data.repartition(3, col("k")), Seq(col("k")), 3, "a", Some(1), true, "right", None)
+    val out = first.sortWithinPartitions("id")
+    val plan = out.queryExecution.executedPlan
+    val op = collect(plan) { case r: RollingApplyExec => r }
+    assert(op.size === 1 && op.head.outputOrdering.isEmpty, plan)
+    assert(collect(op.head) { case x: SortExec => x.sortOrder.map(_.child.sql) } === Seq(Seq("id")), plan)
+    assert(collect(plan) { case x: SortExec => x }.size === 2, plan)
+    val parts = out.select("id").rdd.mapPartitions(it => Iterator(it.map(_.getLong(0)).toSeq)).collect()
+    parts.foreach(ids => assert(ids === ids.sorted, plan))
+    assert(parts.flatten.sorted.toSeq === data.select("id").collect().map(_.getLong(0)).sorted.toSeq)
+  }
+
+  test("a centered grouped rolling over keys ++ order keeps it: the grouped rolling after it adds no sort") {
+    // each key's rows leave before the next key's first row, so the
+    // (k, id) order the input arrives in still holds; a window trusting
+    // it would split keys if rows were held to the end of the partition
     val input = data.repartition(3, col("k")).sortWithinPartitions("k", "id")
     def chain(first: Rolling) = Windows
       .rollingAgg(first(input, Seq(col("k")), 3, "a", Some(1), true, "right", None),
@@ -403,10 +419,9 @@ class RollingApplySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val out = chain(viaOperator)
     val plan = out.queryExecution.executedPlan
     val op = collect(plan) { case r: RollingApplyExec => r }
-    assert(op.size === 1 && op.head.outputOrdering.isEmpty, plan)
-    // the input's own sort serves the first; the second sorts again
-    assert(collect(op.head) { case x: SortExec => x }.size === 1, plan)
-    assert(collect(plan) { case x: SortExec => x }.size === 2, plan)
+    assert(op.size === 1 && op.head.outputOrdering.map(_.child.sql) === Seq("k", "id"), plan)
+    // the input's own sort serves both
+    assert(collect(plan) { case x: SortExec => x }.size === 1, plan)
     def cellsOf(df: DataFrame) = df.collect().map { r =>
       r.getLong(0) -> Seq(1, 2).map(j => Option(r.get(j)).map(x => java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double])))
     }.toMap

@@ -129,6 +129,25 @@ class RunningWindowSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("max and last over a string, fed by a lag WindowExec on (k, t), keep WindowExec and equal it") {
+    // a string buffer value would point into the lag's reused output
+    // row, which the next row overwrites: such aggregates are refused
+    RunningWindow.register(spark)
+    val byKT = Window.partitionBy("k").orderBy("t")
+    def q(s: SparkSession) = frame(s, ties = false, parts = 3)
+      .withColumn("p", lag(format_string("v%s-%s", col("d"), col("l")), 1).over(byKT))
+      .select(col("k"), col("t"), col("p"),
+        max("p").over(w).as("mx"), last(col("p"), ignoreNulls = true).over(w).as("ls"))
+    val got = q(spark)
+    val plan = got.queryExecution.executedPlan
+    assert(collect(plan) { case r: RunningWindowExec => r }.isEmpty, plan)
+    assert(collect(plan) { case x: WindowExec => x }.size === 2, plan)
+    assert(cells(got) === cells(q(plain)))
+    // numeric buffers still take the running operator
+    val numeric = frame(spark, ties = false, parts = 3).select(col("k"), max("d").over(w), last(col("m"), ignoreNulls = true).over(w))
+    assert(collect(numeric.queryExecution.executedPlan) { case r: RunningWindowExec => r }.size === 1)
+  }
+
   test("a DISTINCT or FILTER running aggregate is left to Spark") {
     // the DataFrame API rejects both over a window; the strategy must
     // not take such a Window should one reach it
